@@ -70,12 +70,7 @@ def main() -> int:
 
     from pyspark.sql import SparkSession
 
-    from sparkcodec.engine import (
-        completed_parts,
-        decode_table,
-        prune_parts,
-        snapshot_parts,
-    )
+    from sparkcodec.engine import _plan_scan, decode_table
 
     spark = SparkSession.builder.appName("sparkcodec-decode").getOrCreate()
     if args.as_of is not None:
@@ -101,36 +96,9 @@ def main() -> int:
             wheres.append((col, [_bound(v, tname) for v in vals.split(",")]))
     columns = args.columns.split(",") if args.columns else None
 
-    parts = snapshot_parts(args.input, args.snapshot_id)
-    if parts is None:
-        parts = sorted(completed_parts(args.input))
-    kept = parts
-    if wheres:
-        from sparkcodec.engine import (
-            part_meta,
-            part_stats,
-            part_vsets,
-            prune_parts_bloom,
-            prune_parts_eq,
-        )
-
-        pm = part_meta(args.input)  # ONE metadata read for all predicates
-        stats = part_stats(args.input, pm)
-        vsets = part_vsets(args.input, pm)
-        blooms = {p: d["bloom"] for p, d in pm.items()}
-        for w in wheres:
-            if len(w) == 3:
-                kept = prune_parts(args.input, w, kept, stats=stats)
-            else:
-                col, vals = w
-                try:
-                    kept = prune_parts(
-                        args.input, (col, min(vals), max(vals)), kept, stats=stats
-                    )
-                except TypeError:
-                    pass
-                kept = prune_parts_eq(args.input, col, list(vals), kept, vsets)
-                kept = prune_parts_bloom(args.input, col, list(vals), kept, blooms)
+    # the parts decode_table reads: the same planner, the same pruning
+    plan = _plan_scan(args.input, args.snapshot_id, columns, wheres)
+    parts, kept = plan.live, plan.parts
 
     t0 = time.time()
     df = decode_table(

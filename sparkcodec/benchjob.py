@@ -129,17 +129,10 @@ def _decode_phase_profile(out_dir: str, sample_parts: int = 64) -> dict:
     import pyarrow.parquet as _pq
 
     from sparkcodec.codecs import decode_array
-    from sparkcodec.engine import (
-        _part_file,
-        _read_json,
-        completed_parts,
-        snapshot_parts,
-    )
+    from sparkcodec.engine import _live_parts, _part_file, _read_json
 
     meta = _read_json(os.path.join(out_dir, "_table_meta.json"))
-    parts = snapshot_parts(out_dir)
-    if parts is None:
-        parts = sorted(completed_parts(out_dir))
+    parts = _live_parts(out_dir)
     sample = parts[:: max(1, len(parts) // sample_parts)][:sample_parts]
     io_s = dec_s = 0.0
     n_blocks = 0

@@ -3,18 +3,21 @@ the encoded blocks table, with filter pushdown driving the zone maps.
 
 The reader surface (Spark 4.1 Python DataSource API):
 
-* ``schema()`` comes from ``_table_meta.json`` (the table's authoritative
-  schema, SURVEY §2 S6).
+* ``schema()`` is the schema recorded at the resolved snapshot (the tip,
+  or the ``snapshot_id`` / ``as_of`` / ``ref`` option).
 * ``pushFilters`` accepts simple comparison filters on prunable columns
   and folds them into [lo, hi] bounds per column. Zone-map pruning is
   *conservative* (a kept part/block may still hold non-matching rows), so
   every filter is returned to Spark for post-scan re-evaluation — the
   pushdown only reduces I/O, never correctness obligations.
-* ``partitions()`` maps surviving parts (after part-level pruning across
-  ALL bounded columns) onto a bounded number of input partitions.
-* ``read()`` decodes with the same block-level row-range pruning the
-  engine's ``decode_table`` uses, intersecting ranges across bounded
-  columns, and yields Arrow RecordBatches.
+* ``partitions()`` hands the folded filters (one range and one IN-list
+  per column, plus IS [NOT] NULL) to ``engine._plan_scan``, the one scan
+  planner that also serves ``decode_table`` and the changefeed below,
+  and maps the surviving parts onto a bounded number of input
+  partitions.
+* ``read()`` runs the plan's per-part reader (``engine._PartScan``):
+  the same block-level pruning, field-id resolution and add_column
+  defaults as ``decode_table``, yielding Arrow RecordBatches.
 
 Reading via ``decode_table`` (mapInArrow) and via this data source are
 equivalent; this surface exists so plain ``spark.read`` users get
@@ -96,7 +99,21 @@ def _default_tasks() -> int:
     return 4 * (os.cpu_count() or 8)
 
 
-from .engine import _intersect_ranges  # shared with decode_table's multi-predicate path
+def _input_partitions(plan, n_tasks: int | None = None) -> list:
+    """A scan plan's entries over a bounded number of input partitions.
+    Each partition value carries the per-part reader (``plan.scan``)
+    with its entries: the reader object is serialized BEFORE
+    partitions() runs, so nothing planned here could reach the
+    executors through ``self``."""
+    entries = plan.entries()
+    if not entries:
+        return [InputPartition((plan.scan, []))]
+    n = n_tasks or min(len(entries), _default_tasks())
+    size = -(-len(entries) // n)
+    return [
+        InputPartition((plan.scan, entries[i : i + size]))
+        for i in range(0, len(entries), size)
+    ]
 
 
 class SparkcodecReader(DataSourceReader):
@@ -112,18 +129,12 @@ class SparkcodecReader(DataSourceReader):
         self.eqs: dict[str, list] = {}  # col -> probe values (=, IN)
 
     def pushFilters(self, filters):
-        # add_column initial defaults: pre-add parts carry no stats or
-        # block files for the column yet their rows READ as the default,
-        # so pruning structures would misjudge them — never record
-        # pushdown predicates on defaulted columns (Spark re-evaluates
-        # every filter after this reader regardless)
-        try:
-            defaulted = set((_load_meta(self.out_dir).get("defaults") or {}))
-        except Exception:
-            defaulted = set()
+        # folded into one range and one IN-list per column; the planner
+        # decides what prunes (engine._plan_scan drops predicates on
+        # add_column-defaulted columns, for one)
         for f in filters:
             col = ".".join(f.attribute) if hasattr(f, "attribute") else None
-            if col is None or col in defaulted:
+            if col is None:
                 continue
             val = getattr(f, "value", None)
             if isinstance(f, IsNotNull):
@@ -131,7 +142,7 @@ class SparkcodecReader(DataSourceReader):
             elif isinstance(f, IsNull):
                 self.nulls.setdefault(col, set()).add("isnull")
             elif isinstance(f, In):
-                vs = [v for v in getattr(f, "values", ()) if v is not None]
+                vs = [v for v in val or () if v is not None]
                 if vs and all(isinstance(v, type(vs[0])) for v in vs):
                     self._narrow(col, min(vs), max(vs))
                     self.eqs.setdefault(col, []).extend(vs)
@@ -162,182 +173,19 @@ class SparkcodecReader(DataSourceReader):
             cur[1] = hi
 
     def partitions(self):
-        from .engine import (
-            completed_parts,
-            part_meta,
-            part_null_stats,
-            part_stats,
-            part_vsets,
-            prune_parts,
-            prune_parts_bloom,
-            prune_parts_eq,
-            prune_parts_nulls,
-            snapshot_parts,
+        from .engine import _plan_scan
+
+        wheres = [(c, lo, hi) for c, (lo, hi) in self.bounds.items()]
+        wheres += [(c, tuple(vs)) for c, vs in self.eqs.items()]
+        plan = _plan_scan(
+            self.out_dir, self.snapshot_id, self.columns, wheres, None, self.nulls
         )
-
-        parts = snapshot_parts(self.out_dir, self.snapshot_id)
-        if parts is None:
-            parts = sorted(completed_parts(self.out_dir))
-        # field-id resolution (ghosts for dropped-and-re-added names,
-        # aliases for renamed columns): computed on the driver and
-        # shipped INSIDE the partition values — the reader object is
-        # serialized before partitions() runs, so a mutated self
-        # attribute would never reach the executors. Tasks decode
-        # ghosted columns as NULL and renamed columns from their storage
-        # names, same rule as engine.decode_table. Computed BEFORE any
-        # stat pruning: a ghost part's recorded stats describe the DEAD
-        # field, and null pruning must not judge the tip's all-NULL
-        # column by them.
-        remap: dict = {}
-        from .engine import _column_remap, _needs_remap, snapshot_field_ids, snapshots
-
-        snaps = snapshots(self.out_dir)
-        if _needs_remap(snaps):
-            sid = self.snapshot_id
-            if sid is None and snaps:
-                from .engine import _tip_entry
-
-                sid = _tip_entry(snaps)["id"]
-            if sid is not None:
-                remap = _column_remap(
-                    self.out_dir, self.columns, parts,
-                    snapshot_field_ids(self.out_dir, sid, snaps=snaps),
-                    snaps=snaps,
-                )
-        # parts where a column is GHOSTED decode it as all-NULL whatever
-        # its dead stats say: they must bypass null pruning on that
-        # column (an 'IS NULL' probe matches EVERY row of such a part,
-        # yet the dead field's zero-null accounting would drop it).
-        # Range/eq/IN pruning may still use the dead stats: those
-        # predicates never match NULL, so any drop they make is sound,
-        # and a keep is merely conservative (Spark re-evaluates filters).
-        # Aliased parts carry their stats under the storage name, so a
-        # lookup by the requested name misses and stays conservative.
-        ghost_parts: dict[str, set] = {}
-        for p, (gh, _al) in remap.items():
-            for c in gh:
-                ghost_parts.setdefault(c, set()).add(int(p))
-        if self.bounds or self.eqs or self.nulls:
-            # ONE manifest-backed metadata read for all pruning dimensions
-            # (O(#snapshots) files, not O(#parts) checkpoint opens)
-            pm = part_meta(self.out_dir, parts=parts)
-            for col, (lo, hi) in self.bounds.items():
-                parts = prune_parts(
-                    self.out_dir, (col, lo, hi), parts, stats=part_stats(self.out_dir, pm)
-                )
-            for col, values in self.eqs.items():
-                parts = prune_parts_eq(
-                    self.out_dir, col, values, parts, part_vsets(self.out_dir, pm)
-                )
-                parts = prune_parts_bloom(
-                    self.out_dir, col, values, parts,
-                    {p: d["bloom"] for p, d in pm.items()},
-                )
-            for col, kinds in self.nulls.items():
-                protected = ghost_parts.get(col, set())
-                prunable = [p for p in parts if int(p) not in protected]
-                kept_ghosts = [p for p in parts if int(p) in protected]
-                for kind in kinds:
-                    prunable = prune_parts_nulls(
-                        self.out_dir, col, kind, prunable,
-                        part_null_stats(self.out_dir, pm),
-                    )
-                parts = sorted(set(prunable) | set(kept_ghosts))
-        if not parts:
-            return [InputPartition([])]
-
-        def val(p):
-            gh, al = remap.get(int(p), (frozenset(), {}))
-            return (int(p), tuple(sorted(gh)), tuple(sorted(al.items())))
-
-        vals = [val(p) for p in parts]
-        n_tasks = self.n_tasks or min(len(parts), _default_tasks())
-        size = -(-len(parts) // n_tasks)
-        return [InputPartition(vals[i : i + size]) for i in range(0, len(vals), size)]
+        return _input_partitions(plan, self.n_tasks)
 
     def read(self, partition):
-        import pyarrow as pa
-
-        from .engine import (
-            _DECODE_ARROW_OF,
-            _decode_column_ranges,
-            _decode_part_batches,
-            _keep_row_ranges,
-            _keep_row_ranges_nulls,
-        )
-
-        meta = _load_meta(self.out_dir)
-        arrow_schema = pa.schema(
-            [(c, _DECODE_ARROW_OF[meta["schema"][c]]) for c in self.columns]
-        )
-        fill = {
-            c: v for c, v in (meta.get("defaults") or {}).items()
-            if c in self.columns
-        } or None
-        for pid, gh_cols, al_items in partition.value:
-            gh = frozenset(gh_cols)
-            al = dict(al_items)
-            ranges = None
-            pruned = False
-            # a GHOST column is all-NULL at this snapshot, so its stored
-            # (dead) block stats must not drive pruning: a range or
-            # NOT NULL predicate matches nothing (drop the part), and
-            # IS NULL matches everything (skip pruning on it)
-            if any(c in gh for c in self.bounds) or any(
-                c in gh and "notnull" in ks for c, ks in self.nulls.items()
-            ):
-                continue
-            for col, (lo, hi) in self.bounds.items():
-                r = _keep_row_ranges(
-                    self.out_dir, pid, (al.get(col, col), lo, hi)
-                )
-                if r is not None:
-                    pruned = True
-                    ranges = r if ranges is None else _intersect_ranges(ranges, r)
-            for col, kinds in self.nulls.items():
-                for kind in kinds:
-                    if col in gh:
-                        continue  # isnull on a ghost: keeps every row
-                    r = _keep_row_ranges_nulls(
-                        self.out_dir, pid, al.get(col, col), kind
-                    )
-                    if r is not None:
-                        pruned = True
-                        ranges = r if ranges is None else _intersect_ranges(ranges, r)
-            if pruned and not ranges:
-                continue
-            if not pruned:
-                yield from _decode_part_batches(
-                    self.out_dir, self.columns, arrow_schema, pid, gh, al,
-                    fill,
-                )
-                continue
-            n_kept = sum(e - s for s, e in ranges)
-            def _absent(col):
-                t = arrow_schema.field(col).type
-                dv = (fill or {}).get(col)
-                arr = (
-                    pa.nulls(n_kept, type=t) if dv is None
-                    else pa.array([dv] * n_kept, type=t)
-                )
-                return pa.chunked_array([arr], type=t)
-
-            from .engine import _exists as _ex, _part_file as _pf
-
-            per_col = {
-                col: (
-                    _absent(col)
-                    if col in gh
-                    or not _ex(_pf(self.out_dir, al.get(col, col), pid))
-                    else _decode_column_ranges(
-                        self.out_dir, al.get(col, col), pid,
-                        arrow_schema.field(col).type, ranges,
-                    )
-                )
-                for col in self.columns
-            }
-            tbl = pa.Table.from_arrays([per_col[c] for c in self.columns], schema=arrow_schema)
-            yield from tbl.to_batches(max_chunksize=65536)
+        scan, entries = partition.value
+        for e in entries:
+            yield from scan.batches(e)
 
 
 class SparkcodecStreamReader(DataSourceStreamReader):
@@ -369,8 +217,7 @@ class SparkcodecStreamReader(DataSourceStreamReader):
             # JSON list of DISJUNCTS, each a predicate or conjunction —
             # '[[["lang",["de"]]], [["doc_id",0,99]]]' = lang IN ('de')
             # OR doc_id BETWEEN 0 AND 99. An empty disjunct normalizes
-            # to [] (always-true: prunes nothing), never None — read()'s
-            # range walk iterates each disjunct.
+            # to [] (always-true: prunes nothing), never None.
             self.wheres_any = [
                 self._parse_where(d) or [] for d in json.loads(wa)
             ]
@@ -400,12 +247,13 @@ class SparkcodecStreamReader(DataSourceStreamReader):
         return {"snapshot": snaps[-1]["id"] if snaps else 0}
 
     def partitions(self, start, end):
-        from .engine import snapshots
+        from .engine import _plan_scan, snapshots
 
         lo, hi = start["snapshot"], end["snapshot"]
+        snaps = snapshots(self.out_dir)
         parts = [
             int(p)
-            for s in snapshots(self.out_dir)
+            for s in snaps
             # compaction/delete/rollback snapshots rearrange existing rows
             # — replaying their parts would duplicate data already
             # delivered (the changefeed is append-only). Merge entries
@@ -425,83 +273,13 @@ class SparkcodecStreamReader(DataSourceStreamReader):
                 else s["new_parts"]
             )
         ]
-        if parts and (self.wheres or self.wheres_any):
-            # part-level pruning through every dimension (zone maps +
-            # value sets + blooms) before any task is scheduled; DNF
-            # disjuncts prune independently and their survivors union
-            from .engine import _prune_parts_conj, part_meta
-
-            pm = part_meta(self.out_dir, parts=parts)
-            if self.wheres:
-                parts = _prune_parts_conj(self.out_dir, self.wheres, parts, pm)
-            if self.wheres_any:
-                keep: set = set()
-                for conj in self.wheres_any:
-                    keep |= set(
-                        _prune_parts_conj(self.out_dir, conj or [], parts, pm)
-                    )
-                parts = sorted(keep)
-        if not parts:
-            return [InputPartition([])]
-        # field-id resolution shipped inside the values (same reason as
-        # the batch reader: the reader serializes before partitions())
-        from .engine import (
-            _column_remap,
-            _needs_remap,
-            _tip_entry,
-            snapshot_field_ids,
-            snapshots,
+        plan = _plan_scan(
+            self.out_dir, None, self.columns, self.wheres, self.wheres_any,
+            parts=parts, snaps=snaps,
         )
+        return _input_partitions(plan)
 
-        snaps = snapshots(self.out_dir)
-        remap: dict = {}
-        if _needs_remap(snaps) and snaps:
-            remap = _column_remap(
-                self.out_dir, self.columns, parts,
-                snapshot_field_ids(
-                    self.out_dir, _tip_entry(snaps)["id"], snaps=snaps
-                ),
-                snaps=snaps,
-            )
-
-        def val(p):
-            gh, al = remap.get(int(p), (frozenset(), {}))
-            return (int(p), tuple(sorted(gh)), tuple(sorted(al.items())))
-
-        vals = [val(p) for p in parts]
-        n_tasks = min(len(vals), _default_tasks())
-        size = -(-len(vals) // n_tasks)
-        return [InputPartition(vals[i : i + size]) for i in range(0, len(vals), size)]
-
-    def read(self, partition):
-        import pyarrow as pa
-
-        from .engine import (
-            _DECODE_ARROW_OF,
-            _decode_part_batches_ranged,
-            _keep_row_ranges_dnf,
-        )
-
-        meta = _load_meta(self.out_dir)
-        arrow_schema = pa.schema(
-            [(c, _DECODE_ARROW_OF[meta["schema"][c]]) for c in self.columns]
-        )
-        fill = {
-            c: v for c, v in (meta.get("defaults") or {}).items()
-            if c in self.columns
-        } or None
-        for pid, gh_cols, al_items in partition.value:
-            gh, al = frozenset(gh_cols), dict(al_items)
-            ranges = (
-                _keep_row_ranges_dnf(
-                    self.out_dir, pid, self.wheres or [], self.wheres_any, al
-                )
-                if (self.wheres or self.wheres_any)
-                else None
-            )
-            yield from _decode_part_batches_ranged(
-                self.out_dir, self.columns, arrow_schema, pid, ranges, gh, al
-            )
+    read = SparkcodecReader.read
 
     def commit(self, end):
         pass  # snapshot log is append-only; nothing to clean up
@@ -540,62 +318,46 @@ class SparkcodecCDCStreamReader(DataSourceStreamReader):
         return {"snapshot": snaps[-1]["id"] if snaps else 0}
 
     def partitions(self, start, end):
-        from .engine import (
-            _cdc_plan,
-            _column_remap,
-            _needs_remap,
-            _tip_entry,
-            snapshot_field_ids,
-            snapshots,
-        )
+        from .engine import _cdc_plan, _plan_scan, snapshots
 
         snaps = snapshots(self.out_dir)
-        plan = _cdc_plan(snaps, start["snapshot"], end["snapshot"])
-        # field-id resolution for the key column rides each plan row
-        remap: dict = {}
-        if plan and _needs_remap(snaps):
-            remap = _column_remap(
-                self.out_dir, [self.key_col], sorted({p[1] for p in plan}),
-                snapshot_field_ids(
-                    self.out_dir, _tip_entry(snaps)["id"], snaps=snaps
-                ),
-                snaps=snaps,
-            )
+        changes = _cdc_plan(snaps, start["snapshot"], end["snapshot"])
+        # the key column's field-id resolution rides each change row
+        plan = _plan_scan(
+            self.out_dir, None, [self.key_col],
+            parts=sorted({c[1] for c in changes}), snaps=snaps,
+        )
+        entry_of = {e[0]: e for e in plan.entries()}
         by_sid: dict[int, list] = {}
-        for sid, pid, w, ch in plan:
-            gh, al = remap.get(int(pid), (frozenset(), {}))
-            by_sid.setdefault(sid, []).append(
-                (sid, pid, w, ch, tuple(sorted(gh)), tuple(sorted(al.items())))
-            )
+        for sid, pid, w, ch in changes:
+            by_sid.setdefault(sid, []).append((sid, w, ch, entry_of[pid]))
         if not by_sid:
-            return [InputPartition([])]
-        return [InputPartition(rows) for _sid, rows in sorted(by_sid.items())]
+            return [InputPartition((plan.scan, []))]
+        return [
+            InputPartition((plan.scan, rows)) for _sid, rows in sorted(by_sid.items())
+        ]
 
     def read(self, partition):
         import numpy as np
         import pyarrow as pa
         import pyarrow.compute as pc
 
-        from .engine import _DECODE_ARROW_OF, _part_key_counts
+        from .engine import _part_key_counts
 
-        if not partition.value:
+        scan, rows = partition.value
+        if not rows:
             return
-        meta = _load_meta(self.out_dir)
-        key_arrow = _DECODE_ARROW_OF[meta["schema"][self.key_col]]
-        key_schema = pa.schema([(self.key_col, key_arrow)])
+        key_arrow = scan.arrow_schema.field(0).type
         out_schema = pa.schema([
             (self.key_col, key_arrow), ("_op", pa.string()),
             ("_snapshot_id", pa.int64()), ("_n", pa.int64()),
         ])
-        sid = partition.value[0][0]
+        sid = rows[0][0]
         # per-part vectorized value_counts, then one Arrow group-by sum
         # per channel — no per-row Python anywhere on the key path
         per_ch: dict[str, list] = {"insert": [], "delete": []}
-        for _sid, pid, w, ch, gh_cols, al_items in partition.value:
-            res = _part_key_counts(
-                self.out_dir, self.key_col, key_schema, pid,
-                frozenset(gh_cols), dict(al_items),
-            )
+        for _sid, w, ch, entry in rows:
+            res = _part_key_counts(scan, entry)
             if res is None:
                 continue
             values, counts = res
@@ -767,9 +529,7 @@ class SparkcodecWriter(DataSourceArrowWriter):
 
                 parts = legacy_root_parts(self.out_dir, parts, self.base)
             cur = _load_meta(self.out_dir)
-            from .engine import write_manifest
-
-            from .engine import _tip_entry
+            from .engine import _entry_schema, _tip_entry, write_manifest
 
             entry = {
                 # ids are log-sequence; the parent is the MAIN tip (a
@@ -786,8 +546,7 @@ class SparkcodecWriter(DataSourceArrowWriter):
                 "layout": "aligned",
                 # schema versioned per snapshot (time travel reads the
                 # schema in effect at commit time, engine.snapshot_schema)
-                "columns": cur["columns"],
-                "schema": cur["schema"],
+                **_entry_schema(cur),
                 "field_ids": self.field_ids,
                 "ts": time.time(),
             }

@@ -38,6 +38,7 @@ import os
 import re
 import time
 import uuid
+from dataclasses import dataclass
 
 import numpy as np
 import pyarrow as pa
@@ -1665,39 +1666,39 @@ def part_null_stats(out_dir: str, meta: dict | None = None) -> dict[int, dict]:
     return {p: {"n_rows": d["n_rows"], "nulls": d["nulls"]} for p, d in pm.items()}
 
 
-def _prune_parts_conj(
-    out_dir: str, wheres: list[tuple], parts: list[int], pm: dict
+def _prune_parts_pred(
+    out_dir: str, w: tuple, kind: str | None, parts: list[int], pm: dict
 ) -> list[int]:
-    """Part pruning for one CONJUNCTION of normalized predicates through
-    every dimension: zone-map span for ranges; span + exact value-set +
-    bloom membership for point and IN-list predicates."""
-    for w in wheres:
-        if len(w) == 2:
-            # IN-list: zone-map span + exact value-set + bloom membership
-            # (prune_parts_eq/_bloom already take lists)
-            col, vals = w
-            try:
-                span = (col, min(vals), max(vals))
-            except TypeError:
-                span = None  # mixed-type values: no orderable span
-            if span is not None:
-                parts = prune_parts(out_dir, span, parts, stats=part_stats(out_dir, pm))
-            probes = list(vals)
-        elif w[1] is not None and w[1] == w[2]:
-            parts = prune_parts(out_dir, w, parts, stats=part_stats(out_dir, pm))
-            probes = [w[1]]  # point predicate: exact membership can
-            # refute parts whose [min, max] range merely spans the value
-        else:
-            parts = prune_parts(out_dir, w, parts, stats=part_stats(out_dir, pm))
-            probes = None
-        if probes is not None:
-            parts = prune_parts_eq(
-                out_dir, w[0], probes, parts, part_vsets(out_dir, pm)
+    """Part pruning for ONE normalized predicate through every
+    dimension: null counts for a ``kind`` ("isnull" / "notnull") check
+    on column ``w[0]``; else zone-map span for ranges, and span + exact
+    value-set + bloom membership for point and IN-list predicates."""
+    if kind is not None:
+        return prune_parts_nulls(
+            out_dir, w[0], kind, parts, part_null_stats(out_dir, pm)
+        )
+    if len(w) == 2:
+        # IN-list: zone-map span + exact value-set + bloom membership
+        # (prune_parts_eq/_bloom already take lists)
+        col, vals = w
+        try:
+            parts = prune_parts(
+                out_dir, (col, min(vals), max(vals)), parts,
+                stats=part_stats(out_dir, pm),
             )
-            parts = prune_parts_bloom(
-                out_dir, w[0], probes, parts,
-                {p: d["bloom"] for p, d in pm.items()},
-            )
+        except TypeError:
+            pass  # mixed-type values: no orderable span
+        probes = list(vals)
+    else:
+        parts = prune_parts(out_dir, w, parts, stats=part_stats(out_dir, pm))
+        # point predicate: exact membership can refute parts whose
+        # [min, max] range merely spans the value
+        probes = [w[1]] if w[1] is not None and w[1] == w[2] else None
+    if probes is not None:
+        parts = prune_parts_eq(out_dir, w[0], probes, parts, part_vsets(out_dir, pm))
+        parts = prune_parts_bloom(
+            out_dir, w[0], probes, parts, {p: d["bloom"] for p, d in pm.items()}
+        )
     return parts
 
 
@@ -1892,8 +1893,7 @@ def _commit_optimistic_append(
             # would become unreadable at this tip); stamp the merged
             # union instead (same rule as compact's optimistic commit)
             entry = dict(
-                entry, columns=evolved["columns"], schema=evolved["schema"],
-                field_ids=evolved["field_ids"],
+                entry, **_entry_schema(evolved), field_ids=evolved["field_ids"]
             )
             # the PARTS of this run stamped planning-time field ids into
             # their checkpoints (and `pm`, about to become the manifest).
@@ -1943,8 +1943,7 @@ def _ensure_snapshot_root(out_dir: str, live: list[int], meta: dict) -> None:
         "n_rows": 0,
         "enc_bytes": 0,
         "layout": meta.get("layout", "clustered"),
-        "columns": meta["columns"],
-        "schema": meta["schema"],
+        **_entry_schema(meta),
         # one-time O(live) checkpoint fold: every pruned read of this
         # legacy table afterwards is O(#manifests)
         "manifest": write_manifest(out_dir, sorted(live)),
@@ -2255,6 +2254,7 @@ def encode_table(
         # positional one — column order or past drops would skew it);
         # evolution below re-merges and allocates for genuinely new cols
         meta["field_ids"], meta["next_field_id"] = _field_ids_of(prev)
+        meta["defaults"] = prev.get("defaults") or {}
         if prev["schema"] != meta["schema"] or prev["columns"] != cols:
             # schema evolution (Iceberg add-column posture): columns the
             # two schemas share must have identical storage types; columns
@@ -2515,8 +2515,7 @@ def encode_table(
             "layout": layout,
             # schema versioned per snapshot: time travel to a
             # pre-evolution snapshot reads the schema in effect then
-            "columns": meta["columns"],
-            "schema": meta["schema"],
+            **_entry_schema(meta),
             "field_ids": meta["field_ids"],
             "ts": time.time(),
         }
@@ -2707,6 +2706,17 @@ def snapshot_parts(
     return sorted(live)
 
 
+def _chain_entry(snaps: list[dict], snapshot_id: int, key: str) -> dict | None:
+    """The nearest entry of ``snapshot_id``'s parent chain that recorded
+    ``key`` (None when none did: chains written before that field was
+    stamped)."""
+    by_id = {s["id"]: s for s in snaps}
+    cur = by_id.get(snapshot_id)
+    while cur and key not in cur:
+        cur = by_id.get(cur["parent"])
+    return cur
+
+
 def snapshot_schema(
     out_dir: str, snapshot_id: int, snaps: list[dict] | None = None
 ) -> tuple[list, dict] | None:
@@ -2716,15 +2726,10 @@ def snapshot_schema(
     entirely by older engines — callers fall back to the current table
     meta, the pre-versioning behavior. Pass ``snaps`` when the log is
     already in hand (avoids a re-read on the decode planning path)."""
-    if snaps is None:
-        snaps = snapshots(out_dir)
-    by_id = {s["id"]: s for s in snaps}
-    cur = by_id.get(snapshot_id)
-    while cur:
-        if "schema" in cur:
-            return cur.get("columns") or list(cur["schema"]), cur["schema"]
-        cur = by_id.get(cur["parent"])
-    return None
+    e = _chain_entry(
+        snaps if snaps is not None else snapshots(out_dir), snapshot_id, "schema"
+    )
+    return None if e is None else (e.get("columns") or list(e["schema"]), e["schema"])
 
 
 def _field_ids_of(meta: dict) -> tuple[dict[str, int], int]:
@@ -2747,15 +2752,10 @@ def snapshot_field_ids(
     """The {column: field_id} mapping in effect AT a snapshot (walks the
     parent chain like :func:`snapshot_schema`); None for chains written
     before field-id stamping — those read under name identity."""
-    if snaps is None:
-        snaps = snapshots(out_dir)
-    by_id = {s["id"]: s for s in snaps}
-    cur = by_id.get(snapshot_id)
-    while cur:
-        if "field_ids" in cur:
-            return cur["field_ids"]
-        cur = by_id.get(cur["parent"])
-    return None
+    e = _chain_entry(
+        snaps if snaps is not None else snapshots(out_dir), snapshot_id, "field_ids"
+    )
+    return None if e is None else e["field_ids"]
 
 
 def _needs_remap(snaps) -> bool:
@@ -2825,11 +2825,12 @@ def _resolve_snapshot_meta(
     snapshot_id: int | None,
     snaps: list[dict] | None = None,
 ) -> tuple[dict, int | None, list[dict]]:
-    """Overlay the schema recorded at the RESOLVED snapshot (explicit id,
-    else the tip) onto ``meta`` — the one place the
-    tip/explicit-id/pre-versioning-fallback rules live, shared by
-    decode_table, table_column_stats, and the DataSource schema().
-    Returns (meta, resolved_sid, snaps)."""
+    """Overlay the schema, add_column defaults and field ids recorded at
+    the RESOLVED snapshot (explicit id, else the tip) onto ``meta`` — the
+    one place the tip/explicit-id/pre-versioning-fallback rules live
+    (:func:`_plan_scan` and the DataSource schema() resolve through it).
+    Each field falls back to ``meta`` for chains written before it was
+    stamped. Returns (meta, resolved_sid, snaps)."""
     if snaps is None:
         snaps = snapshots(out_dir)
     sid = snapshot_id if snapshot_id is not None else (
@@ -2839,7 +2840,31 @@ def _resolve_snapshot_meta(
         ss = snapshot_schema(out_dir, sid, snaps=snaps)
         if ss is not None:
             meta = dict(meta, columns=ss[0], schema=ss[1])
+        for key in ("defaults", "field_ids"):
+            e = _chain_entry(snaps, sid, key)
+            if e is not None:
+                meta = dict(meta, **{key: e[key]})
     return meta, sid, snaps
+
+
+def _entry_schema(meta: dict) -> dict:
+    """The read schema every schema-stamping commit records on its
+    snapshot entry, so time travel resolves columns, types and
+    add_column defaults as they were at that snapshot."""
+    return {
+        "columns": meta["columns"],
+        "schema": meta["schema"],
+        "defaults": meta.get("defaults") or {},
+    }
+
+
+def _live_parts(
+    out_dir: str, snapshot_id: int | None = None, snaps: list[dict] | None = None
+) -> list[int]:
+    """A snapshot's live part set (default: the main tip); tables that
+    predate the snapshot log fall back to every checkpointed part."""
+    parts = snapshot_parts(out_dir, snapshot_id, snaps=snaps)
+    return sorted(completed_parts(out_dir)) if parts is None else parts
 
 
 def _spark_schema_arrow(df: DataFrame) -> dict:
@@ -2866,9 +2891,8 @@ def _to_output_type(arr: pa.Array, target: pa.DataType) -> pa.Array:
 
 
 def _intersect_ranges(a, b):
-    """Intersection of two sorted half-open row-range lists — shared by
-    the engine decode kernel and the DataSource reader (both prune
-    block-level ranges per predicate column, then intersect)."""
+    """Intersection of two sorted half-open row-range lists — the AND
+    side of block-level pruning (per-predicate ranges intersect)."""
     out, i, j = [], 0, 0
     while i < len(a) and j < len(b):
         lo = max(a[i][0], b[j][0])
@@ -2923,23 +2947,11 @@ def _normalize_where(where) -> list[tuple]:
     return [one(w) for w in where]
 
 
-def _prunable_preds(wheres, defaults):
-    """Predicates safe to PRUNE with when ``defaults`` (add_column
-    initial defaults) exist: a defaulted column's pre-add parts carry no
-    stats and no block file, yet their rows READ as the default — every
-    pruning structure would misjudge them (a missing block file prunes
-    to nothing, NOT NULL stats say all-NULL), so predicates on such
-    columns are dropped from the pruning set (pruning is conservative;
-    exactness always comes from the composed filter)."""
-    if not defaults:
-        return wheres
-    return [w for w in wheres if w[0] not in defaults]
-
-
 def _prunable_dnf(wheres_any, defaults):
-    """DNF twin of :func:`_prunable_preds`: dropping a predicate widens
-    its disjunct (conservative); a disjunct that becomes EMPTY keeps
-    everything, making the whole disjunction unprunable (None)."""
+    """``wheres_any`` without predicates on ``defaults`` columns (see
+    :func:`_plan_scan`): dropping a predicate widens its disjunct
+    (conservative); a disjunct that becomes EMPTY keeps everything,
+    making the whole disjunction unprunable (None)."""
     if not defaults or not wheres_any:
         return wheres_any
     out = []
@@ -2951,25 +2963,39 @@ def _prunable_dnf(wheres_any, defaults):
     return out
 
 
+def _with_nulls(wheres, nulls=()):
+    """One predicate list: ``(where, None)`` for each where-form predicate
+    and ``((col,), kind)`` for each ``(col, "isnull" | "notnull")``."""
+    return [(w, None) for w in wheres] + [((c,), k) for c, k in nulls]
+
+
 def _keep_row_ranges_multi(
-    out_dir: str, pid: int, wheres: list[tuple], aliases: dict | None = None
+    out_dir: str, pid: int, wheres: list[tuple], aliases: dict | None = None,
+    ghosts: frozenset = frozenset(), nulls=(),
 ):
     """Block-level row ranges of one part surviving ALL predicates
-    (conjunction): per-column ranges intersect, exactly like the
-    DataSource reader's multi-bound path. None = nothing pruned.
+    (conjunction): per-column ranges intersect. None = nothing pruned.
     ``aliases`` resolve predicate columns a rename moved to their
     storage names in this part — WITHOUT it a predicate on a renamed
-    column would find no block file and wrongly prune every row."""
+    column would find no block file and wrongly prune every row.
+    A ``ghosts`` column reads all-NULL here: it matches no range, IN or
+    NOT NULL predicate, and every row for IS NULL. ``nulls`` are
+    ``(col, "isnull" | "notnull")`` predicates."""
     ranges = None
     pruned = False
     al = aliases or {}
-    for w in wheres:
+    for w, kind in _with_nulls(wheres, nulls):
+        if w[0] in ghosts:
+            if kind == "isnull":
+                continue
+            return []
         c = al.get(w[0], w[0])
-        r = (
-            _keep_row_ranges_in(out_dir, pid, c, w[1])
-            if len(w) == 2
-            else _keep_row_ranges(out_dir, pid, (c,) + tuple(w[1:]))
-        )
+        if kind is not None:
+            r = _keep_row_ranges_nulls(out_dir, pid, c, kind)
+        elif len(w) == 2:
+            r = _keep_row_ranges_in(out_dir, pid, c, w[1])
+        else:
+            r = _keep_row_ranges(out_dir, pid, (c,) + tuple(w[1:]))
         if r is not None:
             pruned = True
             ranges = r if ranges is None else _intersect_ranges(ranges, r)
@@ -2980,22 +3006,23 @@ def _keep_row_ranges_multi(
 
 def _keep_row_ranges_dnf(
     out_dir: str, pid: int, wheres: list[tuple], wheres_any: list[list[tuple]],
-    aliases: dict | None = None,
+    aliases: dict | None = None, ghosts: frozenset = frozenset(), nulls=(),
 ):
-    """Block ranges surviving ``wheres`` (conjunction) AND the
-    disjunction of ``wheres_any``'s conjunctions: each disjunct's ranges
-    UNION (a row matching any disjunct must be read), the result
+    """Block ranges surviving ``wheres`` and ``nulls`` (conjunction) AND
+    the disjunction of ``wheres_any``'s conjunctions: each disjunct's
+    ranges UNION (a row matching any disjunct must be read), the result
     intersects the conjunctive side. None = nothing pruned. ``aliases``
-    resolve renamed predicate columns (see _keep_row_ranges_multi)."""
+    and ``ghosts`` resolve predicate columns per part (see
+    _keep_row_ranges_multi)."""
     ranges = (
-        _keep_row_ranges_multi(out_dir, pid, wheres, aliases)
-        if wheres else None
+        _keep_row_ranges_multi(out_dir, pid, wheres, aliases, ghosts, nulls)
+        if wheres or nulls else None
     )
     if wheres_any:
         u = None
         unpruned = False
         for conj in wheres_any:
-            r = _keep_row_ranges_multi(out_dir, pid, conj, aliases)
+            r = _keep_row_ranges_multi(out_dir, pid, conj, aliases, ghosts)
             if r is None:
                 unpruned = True  # this disjunct keeps everything
                 break
@@ -3187,131 +3214,261 @@ def _part_row_count(out_dir: str, pid: int) -> int:
 
 
 def _decode_part_batches(
-    out_dir: str, columns, arrow_schema: pa.Schema, pid: int,
+    out_dir: str, columns, arrow_schema: pa.Schema, pid: int, ranges=None,
     ghost_cols: frozenset = frozenset(),
     aliases: dict | None = None,
     fill: dict | None = None,
 ):
-    """Decode one part's requested columns into Arrow batches (the shared
-    unpruned path: engine decode kernel, DataSource batch/stream readers,
-    and compaction all route through here). A column with no block file
-    for this part predates a schema evolution — it decodes as nulls.
-    ``ghost_cols`` are columns whose block files exist but belong to a
-    RETIRED field id (the name was dropped and re-added; see
-    :func:`_column_remap`) — they decode as nulls too, never as the dead
-    field's historical values. ``aliases`` maps a requested name to the
-    STORAGE name this part holds the field under (rename_column is
-    metadata-only; old parts keep their old block-file names). ``fill``
-    carries add_column initial DEFAULTS: they apply exactly where the
-    absent/ghosted column would otherwise yield NULL — rows written
-    after the add keep their stored values, including stored NULLs."""
-    per_col = {}
+    """Decode one part's requested columns into Arrow batches, restricted
+    to the given row ranges (None = all rows, [] = nothing) — the body of
+    the plan's per-part reader (:class:`_PartScan`). Block grids are per
+    column (the byte cap can split a wide column finer than a narrow
+    one), so each column reassembles independently as a chunked array —
+    zero-copy concat — and Arrow re-slices aligned output batches.
+
+    A column with no block file for this part predates a schema
+    evolution — it decodes as nulls. ``ghost_cols`` are columns whose
+    block files exist but belong to a RETIRED field id (the name was
+    dropped and re-added; see :func:`_column_remap`) — they decode as
+    nulls too, never as the dead field's historical values. ``aliases``
+    maps a requested name to the STORAGE name this part holds the field
+    under (rename_column is metadata-only; old parts keep their old
+    block-file names). ``fill`` carries add_column initial DEFAULTS: they
+    apply exactly where the absent/ghosted column would otherwise yield
+    NULL — rows written after the add keep their stored values,
+    including stored NULLs."""
+    if ranges is not None and not ranges:
+        return  # every block of this part pruned
+    per_col = []
     for col in columns:
         target = arrow_schema.field(col).type
         path = _part_file(out_dir, (aliases or {}).get(col, col), pid)
         if col in ghost_cols or not _exists(path):
-            n = _part_row_count(out_dir, pid)
+            n = (
+                _part_row_count(out_dir, pid) if ranges is None
+                else sum(e - s for s, e in ranges)
+            )
             dv = (fill or {}).get(col)
             arr = (
                 pa.nulls(n, type=target) if dv is None
                 else pa.array([dv] * n, type=target)
             )
-            per_col[col] = pa.chunked_array([arr], type=target)
-            continue
-        t = _pq_read(path).sort_by("block_id")
-        chunks = [
-            _to_output_type(
-                decode_array(
-                    t.column("payload")[b].as_py(),
-                    json.loads(t.column("meta")[b].as_py()),
-                ),
-                target,
-            )
-            for b in range(t.num_rows)
-        ]
-        per_col[col] = pa.chunked_array(chunks, type=target)
-    tbl = pa.Table.from_arrays([per_col[c] for c in columns], schema=arrow_schema)
+            per_col.append(pa.chunked_array([arr], type=target))
+        elif ranges is not None:
+            per_col.append(_decode_column_ranges(
+                out_dir, (aliases or {}).get(col, col), pid, target, ranges
+            ))
+        else:
+            t = _pq_read(path).sort_by("block_id")
+            per_col.append(pa.chunked_array([
+                _to_output_type(
+                    decode_array(
+                        t.column("payload")[b].as_py(),
+                        json.loads(t.column("meta")[b].as_py()),
+                    ),
+                    target,
+                )
+                for b in range(t.num_rows)
+            ], type=target))
+    tbl = pa.Table.from_arrays(per_col, schema=arrow_schema)
     yield from tbl.to_batches(max_chunksize=65536)
 
 
-def _decode_part_batches_ranged(
-    out_dir: str, columns, arrow_schema: pa.Schema, pid: int, ranges,
-    ghost_cols: frozenset = frozenset(),
-    aliases: dict | None = None,
-    fill: dict | None = None,
-):
-    """Decode one part restricted to the given row ranges (None = all
-    rows, [] = nothing). Block grids are per column (the byte cap can
-    split a wide column finer than a narrow one), so each column
-    reassembles independently as a chunked array — zero-copy concat —
-    and Arrow re-slices aligned output batches. Shared by the engine
-    decode kernel and the DataSource stream reader's predicate option.
-    ``ghost_cols`` decode as nulls, ``aliases`` resolve renamed columns
-    to their storage names, ``fill`` applies add_column defaults (see
-    :func:`_decode_part_batches`)."""
-    if ranges is not None and not ranges:
-        return  # every block of this part pruned
-    if ranges is None:
+_NO_REMAP: tuple[frozenset, dict] = (frozenset(), {})
+
+
+@dataclass
+class _PartScan:
+    """Everything a task needs to read planned parts — shipped inside the
+    decode kernel's closure and the DataSource partitions: the resolved
+    read schema, the add_column defaults to fill, and the prunable
+    predicates for block-level pruning. A plan entry is ``(part_id,
+    ghost_columns, alias_items)`` (see :meth:`_ScanPlan.entries`)."""
+
+    out_dir: str
+    columns: tuple
+    arrow_schema: pa.Schema
+    fill: dict | None = None
+    wheres: list | tuple = ()
+    wheres_any: list | None = None
+    nulls: list | tuple = ()
+
+    def ranges(self, entry):
+        """Block keep-ranges of one planned part (None = every row)."""
+        if not (self.wheres or self.wheres_any or self.nulls):
+            return None
+        pid, gh, al = entry
+        return _keep_row_ranges_dnf(
+            self.out_dir, pid, self.wheres, self.wheres_any, dict(al),
+            frozenset(gh), self.nulls,
+        )
+
+    def batches(self, entry):
+        """Arrow batches of one planned part's kept rows."""
+        pid, gh, al = entry
         yield from _decode_part_batches(
-            out_dir, columns, arrow_schema, pid, ghost_cols, aliases, fill
+            self.out_dir, self.columns, self.arrow_schema, pid,
+            self.ranges(entry), frozenset(gh), dict(al), self.fill,
         )
-        return
-    n_kept = sum(e - s for s, e in ranges)
 
-    def absent(col):
-        t = arrow_schema.field(col).type
-        dv = (fill or {}).get(col)
-        arr = (
-            pa.nulls(n_kept, type=t) if dv is None
-            else pa.array([dv] * n_kept, type=t)
+    def unpruned(self, columns=None) -> "_PartScan":
+        """A reader of WHOLE parts (rewrites keep every row they do not
+        drop), optionally narrowed to ``columns``."""
+        cols = tuple(columns or self.columns)
+        return _PartScan(
+            self.out_dir, cols,
+            pa.schema([self.arrow_schema.field(c) for c in cols]),
+            {c: v for c, v in (self.fill or {}).items() if c in cols} or None,
         )
-        return pa.chunked_array([arr], type=t)
-
-    per_col = {
-        col: (
-            absent(col)
-            if col in ghost_cols or not _exists(
-                _part_file(out_dir, (aliases or {}).get(col, col), pid)
-            )
-            else _decode_column_ranges(
-                out_dir, (aliases or {}).get(col, col), pid,
-                arrow_schema.field(col).type, ranges,
-            )
-        )
-        for col in columns
-    }
-    part_table = pa.Table.from_arrays(
-        [per_col[c] for c in columns], schema=arrow_schema
-    )
-    yield from part_table.to_batches(max_chunksize=65536)
 
 
-def _make_decode_kernel(
+@dataclass
+class _ScanPlan:
+    """One resolved scan: ``meta`` is the table meta as of the resolved
+    snapshot (columns, types, defaults, field ids), ``snaps`` the log it
+    was resolved from, ``live`` its live parts, ``parts`` the survivors of part-level pruning, ``remap`` the
+    per-part ``(ghost_columns, aliases)`` and ``scan`` the per-part
+    reader."""
+
+    meta: dict
+    snaps: list
+    live: list
+    parts: list
+    remap: dict
+    scan: _PartScan
+
+    def entries(self, parts=None) -> list[tuple]:
+        """Picklable per-part plan entries for ``parts`` (default: the
+        survivors)."""
+        out = []
+        for p in self.parts if parts is None else parts:
+            gh, al = self.remap.get(int(p), _NO_REMAP)
+            out.append((int(p), tuple(sorted(gh)), tuple(sorted(al.items()))))
+        return out
+
+
+def _prune_resolved(out_dir, wheres, nulls, parts, pm, remap) -> list[int]:
+    """Part-level pruning for ONE conjunction (where-form ``wheres`` plus
+    ``(col, kind)`` null predicates), judged under each part's column
+    resolution: a GHOST column reads all-NULL, so it matches no range,
+    IN or NOT NULL predicate and every row for IS NULL (its stored stats
+    describe the retired field); an ALIASED column is judged by the
+    stats stored under its storage name."""
+    for w, kind in _with_nulls(wheres, nulls):
+        by_name: dict = {}
+        kept = []
+        for p in parts:
+            gh, al = remap.get(int(p), _NO_REMAP)
+            if w[0] not in gh:
+                by_name.setdefault(al.get(w[0], w[0]), []).append(p)
+            elif kind == "isnull":
+                kept.append(p)
+        for c, ps in by_name.items():
+            kept += _prune_parts_pred(out_dir, (c,) + tuple(w[1:]), kind, ps, pm)
+        parts = sorted(kept)
+    return parts
+
+
+def _plan_scan(
     out_dir: str,
-    columns: list[str],
-    arrow_schema: pa.Schema,
-    wheres: list[tuple] | None = None,
-    wheres_any: list[list[tuple]] | None = None,
-    remap: dict[int, tuple[frozenset, dict]] | None = None,
-    fill: dict | None = None,
-    part_ids: list[int] | None = None,
-):
+    snapshot_id: int | None = None,
+    columns=None,
+    wheres=None,
+    wheres_any=None,
+    nulls=None,
+    *,
+    parts=None,
+    snaps: list[dict] | None = None,
+) -> _ScanPlan:
+    """The ONE scan planner behind every read and rewrite path:
+    ``decode_table``, the batch/stream/CDC DataSource readers, the
+    copy-on-write rewrites (compaction, delete, merge), ``optimize_table``,
+    ``table_changes`` and ``table_column_stats``.
+
+    1. Resolve the snapshot (default: the main tip) with ONE log read:
+       the table meta as of that snapshot (:func:`_resolve_snapshot_meta`)
+       and its live parts (legacy tables: every checkpointed part).
+       ``parts`` overrides the live set (the changefeed's appended parts,
+       a partial rewrite), resolved under the same snapshot.
+    2. Resolve columns per part under field-id identity
+       (:func:`_column_remap`): ghosts and rename aliases, for the
+       requested and the predicate columns.
+    3. Drop predicates on add_column-defaulted columns: pre-add parts
+       hold no stats or block file for them yet read the default, so
+       every pruning structure would misjudge them (pruning is
+       conservative; exactness comes from the composed filter).
+    4. Prune parts through zone maps, value sets, blooms and null counts
+       (:func:`_prune_resolved`); ``wheres_any`` disjuncts prune
+       independently and their survivors union.
+
+    ``wheres`` / ``wheres_any`` take normalized where forms
+    (:func:`_normalize_where`); ``nulls`` maps a column to a set of
+    ``"isnull"`` / ``"notnull"``. Block-level pruning inside surviving
+    parts follows the same rules in ``plan.scan``."""
+    meta, sid, snaps = _resolve_snapshot_meta(
+        out_dir, _read_json(_j(out_dir, "_table_meta.json")), snapshot_id, snaps
+    )
+    columns = list(columns or meta["columns"])
+    unknown = sorted(set(columns) - set(meta["schema"]))
+    if unknown:
+        hint = (
+            f"not in the schema of snapshot {sid} ({meta['columns']}); a "
+            f"rollback may have narrowed the tip schema — pass snapshot_id "
+            f"to read an evolved snapshot"
+            if sid is not None
+            else f"not in the table schema ({meta['columns']})"
+        )
+        raise ValueError(f"columns {unknown} {hint}")
+    live = sorted(parts) if parts is not None else _live_parts(out_dir, sid, snaps)
+    defaults = meta.get("defaults") or {}
+    wheres = [w for w in wheres or [] if w[0] not in defaults]
+    wheres_any = _prunable_dnf(wheres_any, defaults) or None
+    nulls = [
+        (c, k) for c, ks in (nulls or {}).items() if c not in defaults
+        for k in sorted(ks)
+    ]
+    want = (
+        snapshot_field_ids(out_dir, sid, snaps=snaps)
+        if sid is not None and _needs_remap(snaps) else None
+    )
+    pm = None
+    if wheres or wheres_any or nulls or want:
+        # one manifest-backed read feeds every pruning dimension AND the
+        # remap — O(#snapshots) metadata files, not O(#parts) opens
+        pm = part_meta(out_dir, parts=live, snaps=snaps)
+    pred_cols = {w[0] for w in wheres} | {c for c, _ in nulls} | {
+        w[0] for conj in wheres_any or [] for w in conj
+    }
+    remap = _column_remap(
+        out_dir, columns + sorted(pred_cols - set(columns)), live, want, pm=pm
+    )
+    kept = live
+    if wheres or nulls:
+        kept = _prune_resolved(out_dir, wheres, nulls, kept, pm, remap)
+    if wheres_any:
+        kept = sorted({
+            p for conj in wheres_any
+            for p in _prune_resolved(out_dir, conj, [], kept, pm, remap)
+        })
+    arrow_schema = pa.schema(
+        [(c, _DECODE_ARROW_OF[meta["schema"][c]]) for c in columns]
+    )
+    fill = {c: v for c, v in defaults.items() if c in columns} or None
+    return _ScanPlan(
+        meta, snaps, live, kept, remap,
+        _PartScan(out_dir, tuple(columns), arrow_schema, fill, wheres,
+                  wheres_any, nulls),
+    )
+
+
+def _make_decode_kernel(scan: _PartScan, entries: list[tuple]):
+    """mapInArrow kernel over ``spark.range(len(entries))``: each id
+    reads one planned part (the entry list rides the closure)."""
+
     def kernel(batches):
         for batch in batches:
             for idx in batch.column(0).to_pylist():
-                pid = part_ids[int(idx)] if part_ids is not None else int(idx)
-                ghosts, aliases = (remap or {}).get(pid, (frozenset(), {}))
-                ranges = (
-                    _keep_row_ranges_dnf(
-                        out_dir, pid, wheres or [], wheres_any, aliases
-                    )
-                    if (wheres or wheres_any)
-                    else None
-                )
-                yield from _decode_part_batches_ranged(
-                    out_dir, columns, arrow_schema, pid, ranges,
-                    ghosts, aliases, fill,
-                )
+                yield from scan.batches(entries[int(idx)])
 
     return kernel
 
@@ -3388,8 +3545,8 @@ def decode_table(
     values at once), then individual blocks inside surviving parts
     through per-block [min, max] metadata — excluded blocks' payloads
     are never decoded. Multi-predicate block pruning intersects the
-    per-column row ranges (the same ``_intersect_ranges`` the DataSource
-    reader applies to pushed filters), and the surviving ranges are
+    per-column row ranges (planning goes through :func:`_plan_scan`, like
+    the DataSource reader's pushed filters), and the surviving ranges are
     applied identically to every requested column (late
     materialization; one shared row order per part keeps columns aligned
     across divergent block grids). Pruning is conservative — kept blocks
@@ -3416,87 +3573,29 @@ def decode_table(
         snapshot_id = snapshot_id_as_of(out_dir, as_of)
     if ref is not None:
         snapshot_id = resolve_ref(out_dir, ref)
-    meta = _read_json(_j(out_dir, "_table_meta.json"))
     # the read schema is the one recorded AT the resolved snapshot — for
     # time travel a later add-column evolution must not leak into the
     # past, and for latest reads a rollback across an evolution narrows
-    # back to the restored snapshot's columns. Chains predating
-    # schema-per-snapshot versioning fall back to the current meta.
-    # ONE log read feeds schema + part resolution
-    meta, sid, snaps = _resolve_snapshot_meta(out_dir, meta, snapshot_id)
-    columns = columns or meta["columns"]
-    unknown = sorted(set(columns) - set(meta["schema"]))
-    if unknown:
-        hint = (
-            f"not in the schema of snapshot {sid} ({meta['columns']}); a "
-            f"rollback may have narrowed the tip schema — pass snapshot_id "
-            f"to read an evolved snapshot"
-            if sid is not None
-            else f"not in the table schema ({meta['columns']})"
-        )
-        raise ValueError(f"columns {unknown} {hint}")
-    arrow_schema = pa.schema(
-        [(c, _DECODE_ARROW_OF[meta["schema"][c]]) for c in columns]
+    # back to the restored snapshot's columns. ``_parts`` (internal):
+    # optimize_table's partial rewrite
+    plan = _plan_scan(
+        out_dir, snapshot_id, columns, _normalize_where(where),
+        [_normalize_where(w) for w in where_any or []], parts=_parts,
     )
-    # snapshot isolation: resolve the part set from the snapshot log when
-    # one exists (never reads parts of an uncommitted/interrupted append);
-    # pre-snapshot tables fall back to every checkpointed part
-    if _parts is not None:
-        parts = sorted(_parts)  # internal: optimize_table's partial rewrite
-    else:
-        parts = snapshot_parts(out_dir, snapshot_id, snaps=snaps)
-        if parts is None:
-            parts = sorted(completed_parts(out_dir))
-    wheres = _normalize_where(where)
-    wheres_any = [_normalize_where(w) for w in (where_any or [])]
-    # add_column initial defaults: filled in the kernel where an absent
-    # column would yield NULL; predicates on defaulted columns are
-    # removed from the PRUNING sets (their pre-add parts carry no stats
-    # or block files, so every pruning structure would misjudge them)
-    defaults = {
-        c: v for c, v in (meta.get("defaults") or {}).items() if c in columns
-    }
-    p_wheres = _prunable_preds(wheres, defaults)
-    p_any = _prunable_dnf(wheres_any, defaults)
-    # field-id resolution (ghosts + rename aliases) exists only after a
-    # drop_column / rename_column somewhere in the log
-    need_remap = _needs_remap(snaps)
-    pm = None
-    if p_wheres or p_any or need_remap:
-        # one manifest-backed read feeds every pruning dimension AND the
-        # remap — O(#snapshots) metadata files, not O(#parts) opens
-        pm = part_meta(out_dir, parts=parts, snaps=snaps)
-    if p_wheres:
-        parts = _prune_parts_conj(out_dir, p_wheres, parts, pm)
-    if p_any:
-        # DNF: a part survives if ANY disjunct keeps it
-        keep: set = set()
-        for conj in p_any:
-            keep |= set(_prune_parts_conj(out_dir, conj, parts, pm))
-        parts = sorted(keep)
-    remap = None
-    if need_remap and sid is not None:
-        remap = _column_remap(
-            out_dir, columns, parts,
-            snapshot_field_ids(out_dir, sid, snaps=snaps),
-            snaps=snaps, pm=pm,
-        ) or None
+    meta, columns = plan.meta, list(plan.scan.columns)
+    entries = plan.entries()
     # several parts per task: decode parallelism needs only ~4x the slots,
     # and per-task Python handoff dominates with hundreds of tiny tasks.
     # spark.range drives the kernel (pure JVM, contiguous id ranges per
-    # task) with the part-id list in the kernel closure — a
+    # task) with the entry list in the kernel closure — a
     # createDataFrame(parts).repartition() driver table would add a
     # pickled-RDD Python scan plus an exchange to every read
-    n_tasks = max(1, min(len(parts), 4 * spark.sparkContext.defaultParallelism))
-    parts_df = spark.range(0, len(parts), 1, n_tasks)
+    n_tasks = max(1, min(len(entries), 4 * spark.sparkContext.defaultParallelism))
     spark_fields = ", ".join(
         f"`{c}` {_SPARK_TYPE_OF[meta['schema'][c]]}" for c in columns
     )
-    out = parts_df.mapInArrow(
-        _make_decode_kernel(out_dir, columns, arrow_schema, p_wheres,
-                            p_any or None, remap=remap,
-                            fill=defaults or None, part_ids=list(parts)),
-        spark_fields,
+    out = spark.range(0, len(entries), 1, n_tasks).mapInArrow(
+        _make_decode_kernel(plan.scan, entries), spark_fields
     )
     for c, md in (meta.get("field_metadata") or {}).items():
         if c in columns:
@@ -3659,21 +3758,22 @@ def compact_table(
     just before the critical section (deterministic interleaving).
     """
     optimistic = concurrency == "optimistic"
-    meta = _read_json(_j(out_dir, "_table_meta.json"))
-    live = snapshot_parts(out_dir)
-    if live is None:
-        if optimistic:
-            raise ValueError(
-                "optimistic compaction requires a snapshot-logged table "
-                "(rooting a legacy table's log is an exclusive operation)"
-            )
-        live = sorted(completed_parts(out_dir))
+    plan = _plan_scan(out_dir)
+    meta, live = plan.meta, plan.live
+    if optimistic and not plan.snaps:
+        raise ValueError(
+            "optimistic compaction requires a snapshot-logged table "
+            "(rooting a legacy table's log is an exclusive operation)"
+        )
     # legacy (pre-snapshot-log) tables: root the log with the current
     # live set BEFORE any merged part lands — otherwise readers on the
     # completed_parts fallback would see originals AND merged copies
     # (duplicate rows), permanently if the job crashed before the commit
     _ensure_snapshot_root(out_dir, live, meta)
-    rows_of = {p: d["n_rows"] for p, d in part_meta(out_dir, parts=live).items()}
+    rows_of = {
+        p: d["n_rows"]
+        for p, d in part_meta(out_dir, parts=live, snaps=plan.snaps).items()
+    }
     groups: list[list[int]] = []
     cur: list[int] = []
     cur_rows = 0
@@ -3703,25 +3803,17 @@ def compact_table(
             max(max(live), max(completed_parts(out_dir), default=0)) + 1,
         )
     columns = meta["columns"]
-    arrow_schema = pa.schema(
-        [(c, _DECODE_ARROW_OF[meta["schema"][c]]) for c in columns]
-    )
     block_rows = meta.get("block_rows") or 65536
-    # field-id identity through the rewrite: a dropped-and-re-added
-    # column's old parts decode as NULL here too (never resurrected into
-    # the merged copy), renamed columns resolve to their storage names,
-    # and the merged parts carry the CURRENT ids under the CURRENT names
+    # field-id identity through the rewrite: the plan's reader decodes a
+    # dropped-and-re-added column's old parts as NULL (never resurrected
+    # into the merged copy), renamed columns from their storage names and
+    # add_column defaults materialized; the merged parts carry the
+    # snapshot's ids under its names
     cur_fids, _ = _field_ids_of(meta)
-    fill_d = meta.get("defaults") or None  # rewrites materialize defaults
-    snaps_g = snapshots(out_dir)
-    remap = (
-        _column_remap(out_dir, columns, [p for g in groups for p in g],
-                      cur_fids, snaps=snaps_g)
-        if _needs_remap(snaps_g) else {}
-    )
-    plan = [(base + i, json.dumps(g)) for i, g in enumerate(groups)]
-    plan_df = spark.createDataFrame(plan, "new_pid int, grp string").repartition(
-        max(1, min(len(plan), 4 * spark.sparkContext.defaultParallelism))
+    scan, entry_of = plan.scan, {e[0]: e for e in plan.entries(live)}
+    plan_rows = [(base + i, json.dumps(g)) for i, g in enumerate(groups)]
+    plan_df = spark.createDataFrame(plan_rows, "new_pid int, grp string").repartition(
+        max(1, min(len(plan_rows), 4 * spark.sparkContext.defaultParallelism))
     )
 
     def kernel(batches):
@@ -3731,13 +3823,7 @@ def compact_table(
             ):
                 merged = []
                 for pid in json.loads(grp):
-                    gh, al = remap.get(int(pid), (frozenset(), {}))
-                    merged.extend(
-                        _decode_part_batches(
-                            out_dir, columns, arrow_schema, pid, gh, al,
-                            fill_d,
-                        )
-                    )
+                    merged.extend(scan.batches(entry_of[pid]))
                 r = _encode_one_part(
                     new_pid, merged, columns, out_dir, block_rows, 32 << 20,
                     set(), {}, field_ids=cur_fids,
@@ -3761,8 +3847,7 @@ def compact_table(
         "n_rows": sum(r["n_rows"] for r in summary),
         "enc_bytes": sum(r["enc_bytes"] for r in summary),
         "layout": meta.get("layout", "clustered"),
-        "columns": meta["columns"],
-        "schema": meta["schema"],
+        **_entry_schema(meta),
         "field_ids": cur_fids,
         "compaction": True,
         "ts": time.time(),
@@ -3823,8 +3908,7 @@ def compact_table(
             cur_survivors = sorted(cur_live - set(removed))
             entry = dict(
                 body,
-                columns=cur_meta["columns"],
-                schema=cur_meta["schema"],
+                **_entry_schema(cur_meta),
                 manifest=write_manifest(
                     out_dir,
                     cur_survivors + created,
@@ -3913,13 +3997,15 @@ def optimize_table(
     The decoded source is persisted for the rewrite's multiple passes
     (z-bounds agg, rank dictionaries, encode) — one decode, not three.
     """
-    meta = _read_json(_j(out_dir, "_table_meta.json"))
     # fail FAST (before the decode + z-bounds jobs) on storage types the
     # decode->Spark->encode loop cannot preserve: u8/u16/u32 widen to
     # signed, u64 is an int64 bit view, lstr/lbin relax to str/bin — the
-    # re-encode would then trip the schema-evolution type guard anyway
+    # re-encode (validated against the stored table meta) would then trip
+    # the schema-evolution type guard anyway
     bad = {
-        c: s for c, s in meta["schema"].items() if not _storage_roundtrips(s)
+        c: s
+        for c, s in _read_json(_j(out_dir, "_table_meta.json"))["schema"].items()
+        if not _storage_roundtrips(s)
     }
     if bad:
         raise ValueError(
@@ -3927,29 +4013,21 @@ def optimize_table(
             f"don't round-trip through Spark ({bad}); compact_table "
             f"(which re-encodes under the SAME storage schema) still works"
         )
-    live = snapshot_parts(out_dir)
-    if live is None:
-        live = sorted(completed_parts(out_dir))
-    if not live:
-        return {"parts_removed": 0, "parts_created": 0, "n_rows": 0}
-    affected = live
-    if where is not None:
-        wheres = _normalize_where(where)
-        # zone-map pruning keeps parts conservatively when a column is
-        # unknown — right for reads, but here it would silently escalate
-        # a bounded rewrite into the whole-table rewrite the WHERE
-        # exists to avoid (a typo'd column name = 100 TB of I/O)
-        bad_cols = sorted({w[0] for w in wheres} - set(meta["schema"]))
-        if bad_cols:
-            raise ValueError(
-                f"optimize where references unknown columns {bad_cols}; "
-                f"table has {meta['columns']}"
-            )
-        affected = _prune_parts_conj(
-            out_dir, wheres, live, part_meta(out_dir, parts=live)
+    wheres = _normalize_where(where)
+    plan = _plan_scan(out_dir, wheres=wheres)
+    meta, live, affected = plan.meta, plan.live, plan.parts
+    # zone-map pruning keeps parts conservatively when a column is
+    # unknown — right for reads, but here it would silently escalate a
+    # bounded rewrite into the whole-table rewrite the WHERE exists to
+    # avoid (a typo'd column name = 100 TB of I/O)
+    bad_cols = sorted({w[0] for w in wheres} - set(meta["schema"]))
+    if bad_cols:
+        raise ValueError(
+            f"optimize where references unknown columns {bad_cols}; "
+            f"table has {meta['columns']}"
         )
-        if not affected:
-            return {"parts_removed": 0, "parts_created": 0, "n_rows": 0}
+    if not affected:
+        return {"parts_removed": 0, "parts_created": 0, "n_rows": 0}
     # legacy (pre-snapshot-log) tables: root the log BEFORE rewrite parts
     # land, or completed_parts-fallback readers would double-count rows
     _ensure_snapshot_root(out_dir, live, meta)
@@ -3991,7 +4069,9 @@ def optimize_table(
     # a mixed layout, so the table-level clustering claim must not change
     new_meta = pend["evolved_meta"]
     if where is None:
-        new_meta = dict(pend["evolved_meta"] or meta)
+        new_meta = dict(
+            pend["evolved_meta"] or _read_json(_j(out_dir, "_table_meta.json"))
+        )
         new_meta.update({
             "zorder_by": zorder_by, "sort_by": sort_by,
             "cluster_by": cluster_by, "salt_by": salt_by,
@@ -4015,9 +4095,7 @@ def optimize_table(
 def _copy_on_write_delete(
     spark: SparkSession,
     out_dir: str,
-    affected: list[int],
-    live: list[int],
-    meta: dict,
+    plan: _ScanPlan,
     mask_fn,
     tag: list,
     extra: dict | None = None,
@@ -4025,9 +4103,9 @@ def _copy_on_write_delete(
     branch: str | None = None,
 ) -> dict:
     """Shared copy-on-write rewrite for row-level delete/merge: decode
-    each affected part, drop the rows ``mask_fn`` marks (a picklable
-    callable: the part's arrow Table -> boolean mask of rows to DELETE,
-    null-safe), re-encode survivors under new part ids, and commit one
+    each affected part (``plan.parts`` of the ``plan.live`` set), drop
+    the rows ``mask_fn`` marks (a picklable callable: the part's arrow
+    Table -> boolean mask of rows to DELETE, null-safe), re-encode survivors under new part ids, and commit one
     snapshot (removed_parts = changed parts only; an untouched part
     keeps its id with no write). ``tag`` is recorded under the entry's
     ``delete`` key so the changefeed skips the rewrite.
@@ -4043,30 +4121,21 @@ def _copy_on_write_delete(
     ``commit=False`` skips the snapshot publish and returns the
     removed/created part ids under ``result["pending"]`` — the merge
     path folds them with its append into one atomic entry."""
+    meta, live, affected = plan.meta, plan.live, plan.parts
     _ensure_snapshot_root(out_dir, live, meta)
     base = _base_above_reservations(
         out_dir, max(max(live), max(completed_parts(out_dir), default=0)) + 1
     )
     columns = meta["columns"]
-    arrow_schema = pa.schema(
-        [(c, _DECODE_ARROW_OF[meta["schema"][c]]) for c in columns]
-    )
     block_rows = meta.get("block_rows") or 65536
     # field-id identity through the rewrite (same rule as compaction):
-    # ghosted columns decode NULL, renamed columns resolve to their
-    # storage names, survivors re-encode under current ids and names
+    # survivors re-encode under the snapshot's ids and names
     cur_fids, _ = _field_ids_of(meta)
-    fill_d = meta.get("defaults") or None  # rewrites materialize defaults
-    snaps_g = snapshots(out_dir)
-    remap = (
-        _column_remap(out_dir, columns, list(affected), cur_fids,
-                      snaps=snaps_g)
-        if _needs_remap(snaps_g) else {}
-    )
-    plan = [(base + i, int(p)) for i, p in enumerate(affected)]
-    plan_df = spark.createDataFrame(plan, "new_pid int, old_pid int").repartition(
-        max(1, min(len(plan), 4 * spark.sparkContext.defaultParallelism))
-    )
+    scan, entry_of = plan.scan.unpruned(), {e[0]: e for e in plan.entries()}
+    plan_df = spark.createDataFrame(
+        [(base + i, int(p)) for i, p in enumerate(affected)],
+        "new_pid int, old_pid int",
+    ).repartition(max(1, min(len(affected), 4 * spark.sparkContext.defaultParallelism)))
 
     def kernel(batches):
         import pyarrow.compute as pc
@@ -4075,13 +4144,9 @@ def _copy_on_write_delete(
             for new_pid, old_pid in zip(
                 batch.column("new_pid").to_pylist(), batch.column("old_pid").to_pylist()
             ):
-                gh, al = remap.get(int(old_pid), (frozenset(), {}))
                 tbl = pa.Table.from_batches(
-                    list(_decode_part_batches(
-                        out_dir, columns, arrow_schema, old_pid, gh, al,
-                        fill_d,
-                    )),
-                    schema=arrow_schema,
+                    list(scan.batches(entry_of[old_pid])),
+                    schema=scan.arrow_schema,
                 )
                 keep = tbl.filter(pc.invert(mask_fn(tbl)))
                 n_before, n_after = tbl.num_rows, keep.num_rows
@@ -4123,8 +4188,7 @@ def _copy_on_write_delete(
         "n_rows": -deleted,
         "enc_bytes": 0,
         "layout": meta.get("layout", "clustered"),
-        "columns": meta["columns"],
-        "schema": meta["schema"],
+        **_entry_schema(meta),
         "field_ids": cur_fids,
         "delete": tag,
         "ts": time.time(),
@@ -4142,26 +4206,20 @@ def _copy_on_write_delete(
     return out
 
 
-def _load_live(
-    out_dir: str, col: str, branch: str | None = None
-) -> tuple[dict, list[int]]:
-    meta = _read_json(_j(out_dir, "_table_meta.json"))
-    if branch is not None:
-        # resolve against the BRANCH tip: its live set AND the schema in
-        # effect there (main may have evolved since the fork; rewriting
-        # branch parts against main's wider schema would smuggle the
-        # evolution onto the branch)
-        snaps = snapshots(out_dir)
-        sid = _branch_tip(out_dir, branch, snaps)
-        meta, _, _ = _resolve_snapshot_meta(out_dir, meta, sid, snaps=snaps)
-        live = snapshot_parts(out_dir, sid, snaps=snaps)
-    else:
-        live = snapshot_parts(out_dir)
-        if live is None:
-            live = sorted(completed_parts(out_dir))
-    if col not in meta["columns"]:
-        raise ValueError(f"unknown column {col!r}; table has {meta['columns']}")
-    return meta, live
+def _plan_rewrite(out_dir: str, wheres, branch: str | None = None) -> _ScanPlan:
+    """The scan plan of a row-level rewrite: the main tip, or
+    ``branch``'s tip — its live set AND the schema in effect there (main
+    may have evolved since the fork; rewriting branch parts against
+    main's wider schema would smuggle the evolution onto the branch) —
+    pruned by ``wheres``, whose columns must exist."""
+    snaps = snapshots(out_dir)
+    sid = _branch_tip(out_dir, branch, snaps) if branch is not None else None
+    plan = _plan_scan(out_dir, sid, wheres=wheres, snaps=snaps)
+    cols = plan.meta["columns"]
+    for c in [w[0] for w in wheres]:
+        if c not in cols:
+            raise ValueError(f"unknown column {c!r}; table has {cols}")
+    return plan
 
 
 @_with_writer_lock("delete")
@@ -4193,17 +4251,8 @@ def delete_rows(
     wheres = _normalize_where(where)
     if not wheres:
         raise ValueError("delete_rows needs at least one predicate")
-    meta, live = _load_live(out_dir, wheres[0][0], branch=branch)
-    for w in wheres:
-        if w[0] not in meta["columns"]:
-            raise ValueError(
-                f"unknown column {w[0]!r}; table has {meta['columns']}"
-            )
-    if not live:
-        return {"parts_scanned": 0, "parts_rewritten": 0, "rows_deleted": 0}
-    pm = part_meta(out_dir, parts=live)
-    affected = _prune_parts_conj(out_dir, wheres, live, pm)
-    if not affected:
+    plan = _plan_rewrite(out_dir, wheres, branch)
+    if not plan.parts:
         return {"parts_scanned": 0, "parts_rewritten": 0, "rows_deleted": 0}
 
     def mask(tbl):
@@ -4231,17 +4280,14 @@ def delete_rows(
         return m
 
     return _copy_on_write_delete(
-        spark, out_dir, affected, live, meta, mask,
-        [list(w) for w in wheres], branch=branch,
+        spark, out_dir, plan, mask, [list(w) for w in wheres], branch=branch,
     )
 
 
 def _rewrite_parts_dropping_matched_keys(
     spark: SparkSession,
     out_dir: str,
-    affected: list[int],
-    live: list[int],
-    meta: dict,
+    plan: _ScanPlan,
     df: DataFrame,
     key_col: str,
 ) -> dict:
@@ -4262,27 +4308,19 @@ def _rewrite_parts_dropping_matched_keys(
     Returns the same ``pending`` shape as
     ``_copy_on_write_delete(commit=False)``; the caller owns the commit.
     """
+    meta, live, affected = plan.meta, plan.live, plan.parts
     base = _base_above_reservations(
         out_dir, max(max(live), max(completed_parts(out_dir), default=0)) + 1
     )
     mapping = {int(p): base + i for i, p in enumerate(affected)}
     columns = meta["columns"]
-    arrow_schema = pa.schema(
-        [(c, _DECODE_ARROW_OF[meta["schema"][c]]) for c in columns]
-    )
-    key_arrow = _DECODE_ARROW_OF[meta["schema"][key_col]]
     key_spark = _SPARK_TYPE_OF[meta["schema"][key_col]]
-    key_schema = pa.schema([(key_col, key_arrow)])
     block_rows = meta.get("block_rows") or 65536
     # field-id identity through the merge rewrite (same rule as compaction)
     cur_fids, _ = _field_ids_of(meta)
-    fill_d = meta.get("defaults") or None  # rewrites materialize defaults
-    snaps_g = snapshots(out_dir)
-    remap = (
-        _column_remap(out_dir, columns, list(affected), cur_fids,
-                      snaps=snaps_g)
-        if _needs_remap(snaps_g) else {}
-    )
+    scan, entry_of = plan.scan.unpruned(), {e[0]: e for e in plan.entries()}
+    key_scan = scan.unpruned([key_col])
+    key_arrow = key_scan.arrow_schema.field(0).type
 
     plan_df = spark.createDataFrame(
         [(int(p),) for p in affected], "old_pid int"
@@ -4291,10 +4329,7 @@ def _rewrite_parts_dropping_matched_keys(
     def key_kernel(batches):
         for batch in batches:
             for pid in batch.column("old_pid").to_pylist():
-                gh, al = remap.get(int(pid), (frozenset(), {}))
-                for b in _decode_part_batches(
-                    out_dir, [key_col], key_schema, pid, gh, al
-                ):
+                for b in key_scan.batches(entry_of[pid]):
                     yield pa.RecordBatch.from_arrays(
                         [
                             pa.array([pid] * b.num_rows, type=pa.int32()),
@@ -4319,13 +4354,8 @@ def _rewrite_parts_dropping_matched_keys(
 
         old_pid = int(pdf["old_pid"].iloc[0])
         keys = pa.Array.from_pandas(pdf["__k"]).cast(key_arrow)
-        gh, al = remap.get(int(old_pid), (frozenset(), {}))
         tbl = pa.Table.from_batches(
-            list(_decode_part_batches(
-                out_dir, columns, arrow_schema, old_pid, gh, al,
-                fill_d,
-            )),
-            schema=arrow_schema,
+            list(scan.batches(entry_of[old_pid])), schema=scan.arrow_schema
         )
         v = tbl.column(key_col)
         m = pc.and_kleene(pc.is_valid(v), pc.is_in(v, value_set=keys))
@@ -4428,35 +4458,26 @@ def _upsert_rows_inner(
     parts_rewritten = 0
     meta = None
     if _exists(_j(out_dir, "_table_meta.json")):
-        meta, live = _load_live(out_dir, key_col, branch=branch)
-        span = df.agg(
-            F.min(key_col).alias("lo"), F.max(key_col).alias("hi")
-        ).first()
-        affected = (
-            prune_parts(out_dir, (key_col, span["lo"], span["hi"]), live)
-            if span["lo"] is not None and live
-            else []
-        )
-        if affected:
+        lo, hi = df.agg(F.min(key_col), F.max(key_col)).first()
+        span = [(key_col, lo, hi)]
+        plan = _plan_rewrite(out_dir, span, branch)
+        meta = plan.meta
+        if lo is not None and plan.parts:
             # legacy tables root the log BEFORE any rewrite lands, so the
             # rewrites stay invisible until the combined entry commits
-            _ensure_snapshot_root(out_dir, live, meta)
+            _ensure_snapshot_root(out_dir, plan.live, meta)
             head = (
                 df.select(key_col).where(F.col(key_col).isNotNull())
                 .distinct().limit(broadcast_keys + 1).collect()
             )
-            if len(head) <= broadcast_keys:
+            if len(head) > broadcast_keys:
+                rep = _rewrite_parts_dropping_matched_keys(
+                    spark, out_dir, plan, df, key_col
+                )
+            else:
                 keys = sorted(r[0] for r in head)
                 # exact membership can refute parts the range merely spans
-                pm = part_meta(out_dir, parts=affected)
-                affected = prune_parts_eq(
-                    out_dir, key_col, keys, affected, part_vsets(out_dir, pm)
-                )
-                affected = prune_parts_bloom(
-                    out_dir, key_col, keys, affected,
-                    {p: d["bloom"] for p, d in pm.items()},
-                )
-            if affected and len(head) <= broadcast_keys and keys:
+                plan = _plan_rewrite(out_dir, span + [(key_col, keys)], branch)
                 key_bc = spark.sparkContext.broadcast(keys)
 
                 def mask(tbl):
@@ -4468,16 +4489,11 @@ def _upsert_rows_inner(
                         pc.is_in(v, value_set=pa.array(key_bc.value).cast(v.type)),
                     )
 
-                rep = _copy_on_write_delete(
-                    spark, out_dir, affected, live, meta, mask,
+                rep = plan.parts and _copy_on_write_delete(
+                    spark, out_dir, plan, mask,
                     [key_col, "in-set", len(keys)], commit=False,
                 )
-                pending_del = rep["pending"]
-                parts_rewritten = rep["parts_rewritten"]
-            elif affected:
-                rep = _rewrite_parts_dropping_matched_keys(
-                    spark, out_dir, affected, live, meta, df, key_col
-                )
+            if rep:
                 pending_del = rep["pending"]
                 parts_rewritten = rep["parts_rewritten"]
     # resume=False ALWAYS: the merge's commit is atomic at the end, so a
@@ -4499,8 +4515,7 @@ def _upsert_rows_inner(
         "n_rows": 0,
         "enc_bytes": 0,
         "layout": (meta or {}).get("layout", "clustered"),
-        "columns": meta["columns"],
-        "schema": meta["schema"],
+        **_entry_schema(meta),
         "field_ids": _field_ids_of(meta)[0],
     }
     # start from the append's prepared entry so caller-scoped identity
@@ -4556,9 +4571,7 @@ def drop_column(out_dir: str, col: str) -> dict:
     if len(meta["columns"]) == 1:
         raise ValueError(f"cannot drop {col!r}: it is the table's only column")
     snaps = snapshots(out_dir)
-    live = snapshot_parts(out_dir, snaps=snaps)
-    if live is None:
-        live = sorted(completed_parts(out_dir))
+    live = _live_parts(out_dir, snaps=snaps)
     _ensure_snapshot_root(out_dir, live, meta)
     new_meta = dict(meta)
     new_meta["columns"] = [c for c in meta["columns"] if c != col]
@@ -4586,8 +4599,7 @@ def drop_column(out_dir: str, col: str) -> dict:
         "enc_bytes": 0,
         "layout": meta.get("layout", "clustered"),
         "drop_column": col,
-        "columns": new_meta["columns"],
-        "schema": new_meta["schema"],
+        **_entry_schema(new_meta),
         "field_ids": fids,
         "ts": time.time(),
     }
@@ -4625,9 +4637,7 @@ def add_column(
         # validate NOW: a bad default must fail the DDL, not every read
         pa.scalar(default, type=_DECODE_ARROW_OF[storage_type])
     snaps = snapshots(out_dir)
-    live = snapshot_parts(out_dir, snaps=snaps)
-    if live is None:
-        live = sorted(completed_parts(out_dir))
+    live = _live_parts(out_dir, snaps=snaps)
     _ensure_snapshot_root(out_dir, live, meta)
     new_meta = dict(meta)
     new_meta["columns"] = meta["columns"] + [col]
@@ -4647,8 +4657,7 @@ def add_column(
         "enc_bytes": 0,
         "layout": meta.get("layout", "clustered"),
         "add_column": [col, storage_type],
-        "columns": new_meta["columns"],
-        "schema": new_meta["schema"],
+        **_entry_schema(new_meta),
         "field_ids": fids,
         "ts": time.time(),
     }
@@ -4681,9 +4690,7 @@ def rename_column(out_dir: str, old: str, new: str) -> dict:
     if old == new:
         raise ValueError("old and new names are identical")
     snaps = snapshots(out_dir)
-    live = snapshot_parts(out_dir, snaps=snaps)
-    if live is None:
-        live = sorted(completed_parts(out_dir))
+    live = _live_parts(out_dir, snaps=snaps)
     _ensure_snapshot_root(out_dir, live, meta)
     new_meta = dict(meta)
     new_meta["columns"] = [new if c == old else c for c in meta["columns"]]
@@ -4712,8 +4719,7 @@ def rename_column(out_dir: str, old: str, new: str) -> dict:
         "enc_bytes": 0,
         "layout": meta.get("layout", "clustered"),
         "rename_column": [old, new],
-        "columns": new_meta["columns"],
-        "schema": new_meta["schema"],
+        **_entry_schema(new_meta),
         "field_ids": fids,
         "ts": time.time(),
     }
@@ -4747,14 +4753,13 @@ def rollback_table(out_dir: str, snapshot_id: int) -> dict:
         )
     target_parts = snapshot_parts(out_dir, snapshot_id, snaps=snaps)  # validates
     cur = snapshot_parts(out_dir, snaps=snaps)
-    ss = snapshot_schema(out_dir, snapshot_id, snaps=snaps)
-    if ss is None:
-        # target predates schema-per-snapshot versioning: its schema is
-        # unknowable, so stamp the current table meta (the union) — the
-        # chain walk must stop HERE, not drift past the rollback to some
-        # newer evolved entry's schema
-        m = _read_json(_j(out_dir, "_table_meta.json"))
-        ss = (m["columns"], m["schema"])
+    # the target's schema; a target predating schema-per-snapshot
+    # versioning stamps the current table meta (the union) — the chain
+    # walk must stop HERE, not drift past the rollback to some newer
+    # evolved entry's schema
+    at, _, _ = _resolve_snapshot_meta(
+        out_dir, _read_json(_j(out_dir, "_table_meta.json")), snapshot_id, snaps
+    )
     # real row delta for the history audit: visible rows after - before
     # (one O(#parts) metadata read; this is a maintenance op). Refuse to
     # guess when any involved part's meta is unreadable — same posture
@@ -4777,8 +4782,7 @@ def rollback_table(out_dir: str, snapshot_id: int) -> dict:
         # first-class flag: the changefeed must not replay the restored
         # parts (consumers already received them)
         "rollback_of": snapshot_id,
-        "columns": ss[0],
-        "schema": ss[1],
+        **_entry_schema(at),
         "ts": time.time(),
     }
     rf = snapshot_field_ids(out_dir, snapshot_id, snaps=snaps)
@@ -4837,25 +4841,16 @@ def _cdc_plan(snaps: list[dict], start: int, end: int | None) -> list[tuple]:
     return plan
 
 
-def _part_key_counts(
-    out_dir: str, key_col: str, key_schema, pid: int,
-    ghost_cols: frozenset = frozenset(), aliases: dict | None = None,
-):
-    """Distinct-key counts of ONE part's key column, fully vectorized:
-    decode only the key column, one ``pyarrow.compute.value_counts``
-    over the part's batches — NO per-row Python (a null key counts as a
-    distinct value, matching the SQL oracle's GROUP BY). Returns
-    ``(values: pa.Array, counts: pa.Int64Array)`` or ``None`` for an
-    empty part. ``ghost_cols``/``aliases`` apply field-id resolution
-    (a renamed key column reads from its storage name in old parts)."""
+def _part_key_counts(scan: _PartScan, entry: tuple):
+    """Distinct-key counts of ONE planned part's key column (``scan``
+    reads only that column), fully vectorized: one
+    ``pyarrow.compute.value_counts`` over the part's batches — NO
+    per-row Python (a null key counts as a distinct value, matching the
+    SQL oracle's GROUP BY). Returns ``(values: pa.Array, counts:
+    pa.Int64Array)`` or ``None`` for an empty part."""
     import pyarrow.compute as pc
 
-    chunks = [
-        b.column(0)
-        for b in _decode_part_batches(
-            out_dir, [key_col], key_schema, pid, ghost_cols, aliases
-        )
-    ]
+    chunks = [b.column(0) for b in scan.batches(entry)]
     if not chunks:
         return None
     vc = pc.value_counts(pa.chunked_array(chunks))
@@ -4864,18 +4859,19 @@ def _part_key_counts(
     return vc.field("values"), vc.field("counts").cast(pa.int64())
 
 
-def _cdc_key_kernel(out_dir: str, key_col: str, key_arrow, remap=None):
+def _cdc_key_kernel(scan: _PartScan, entry_of: dict):
     """mapInArrow kernel: (sid, pid, w, ch) plan rows -> per-part
     PRE-AGGREGATED (snapshot_id, key, ch, n) counts (map-side combine:
     the shuffle ships one row per distinct key per part, never raw
     rows). Decodes ONLY the key column; the key path is vectorized
     (``_part_key_counts`` — the only Python loop here is over plan rows,
-    i.e. O(#changed parts), never over data rows). ``remap`` carries
-    field-id resolution for a renamed/re-added key column."""
+    i.e. O(#changed parts), never over data rows). ``entry_of`` maps a
+    part id to its plan entry (field-id resolution for a
+    renamed/re-added key column)."""
     import numpy as np
     import pyarrow.compute as pc
 
-    key_schema = pa.schema([(key_col, key_arrow)])
+    key_arrow = scan.arrow_schema.field(0).type
     out_schema = pa.schema([
         ("snapshot_id", pa.int64()), ("__k", key_arrow),
         ("ch", pa.string()), ("n", pa.int64()),
@@ -4884,10 +4880,7 @@ def _cdc_key_kernel(out_dir: str, key_col: str, key_arrow, remap=None):
     def kernel(batches):
         for batch in batches:
             for row in batch.to_pylist():  # O(#plan rows) = parts
-                gh, al = (remap or {}).get(int(row["pid"]), (frozenset(), {}))
-                res = _part_key_counts(
-                    out_dir, key_col, key_schema, row["pid"], gh, al
-                )
+                res = _part_key_counts(scan, entry_of[row["pid"]])
                 if res is None:
                     continue
                 values, counts = res
@@ -4926,38 +4919,29 @@ def table_changes(
     without a full re-read — the append-only changefeed cannot express
     them. Rollback snapshots emit nothing (consumers that must follow a
     rollback should resync from the restored snapshot)."""
-    meta = _read_json(_j(out_dir, "_table_meta.json"))
-    if key_col not in meta["columns"]:
-        raise ValueError(
-            f"unknown key column {key_col!r}; table has {meta['columns']}"
-        )
     snaps = snapshots(out_dir)
-    plan = _cdc_plan(snaps, start_snapshot, end_snapshot)
-    key_arrow = _DECODE_ARROW_OF[meta["schema"][key_col]]
-    key_spark = _SPARK_TYPE_OF[meta["schema"][key_col]]
+    changes = _cdc_plan(snaps, start_snapshot, end_snapshot)
+    # field-id resolution for the key column at the tip: a renamed key
+    # reads from its storage name in pre-rename parts; a
+    # dropped-and-re-added key diffs as NULL there (the dead field's
+    # keys never resurrect)
+    plan = _plan_scan(
+        out_dir, columns=[key_col], parts=sorted({c[1] for c in changes}),
+        snaps=snaps,
+    )
+    key_spark = _SPARK_TYPE_OF[plan.meta["schema"][key_col]]
     out_fields = (
         f"snapshot_id long, {key_col} {key_spark}, op string, n long"
     )
-    if not plan:
+    if not changes:
         return spark.createDataFrame([], out_fields)
-    # field-id resolution for the key column: a renamed key reads from
-    # its storage name in pre-rename parts; a dropped-and-re-added key
-    # diffs as NULL there (the dead field's keys never resurrect)
-    remap = (
-        _column_remap(
-            out_dir, [key_col], sorted({p[1] for p in plan}),
-            snapshot_field_ids(out_dir, _tip_entry(snaps)["id"], snaps=snaps),
-            snaps=snaps,
-        )
-        if _needs_remap(snaps) else None
-    )
     plan_df = spark.createDataFrame(
-        plan, "sid long, pid int, w int, ch string"
+        changes, "sid long, pid int, w int, ch string"
     ).repartition(
-        max(1, min(len(plan), 4 * spark.sparkContext.defaultParallelism))
+        max(1, min(len(changes), 4 * spark.sparkContext.defaultParallelism))
     )
     per_part = plan_df.mapInArrow(
-        _cdc_key_kernel(out_dir, key_col, key_arrow, remap=remap),
+        _cdc_key_kernel(plan.scan, {e[0]: e for e in plan.entries()}),
         f"snapshot_id long, __k {key_spark}, ch string, n long",
     )
     agg = per_part.groupBy("snapshot_id", "__k", "ch").agg(
@@ -4996,27 +4980,11 @@ def table_column_stats(out_dir: str, snapshot_id: int | None = None) -> dict:
     ``snapshot_id``, else the tip) — consistent with ``decode_table``:
     after a rollback across an add-column evolution, narrowed-away
     columns are not reported."""
-    meta = _read_json(_j(out_dir, "_table_meta.json"))
-    meta, _sid, snaps = _resolve_snapshot_meta(out_dir, meta, snapshot_id)
-    parts = snapshot_parts(out_dir, snapshot_id, snaps=snaps)
-    if parts is None:
-        parts = sorted(completed_parts(out_dir))
-    pm = part_meta(out_dir, parts=parts, snaps=snaps)
-    # field-id resolution, same rule as decode: a renamed column's stats
-    # live under its STORAGE name in old parts; a dropped-and-re-added
-    # column's old parts are all-NULL at this snapshot — without this
-    # the stats would read the dead field's values and claim exactness
-    remap = (
-        _column_remap(
-            out_dir, meta["columns"], parts,
-            snapshot_field_ids(out_dir, _sid, snaps=snaps)
-            if _sid is not None else None,
-            snaps=snaps, pm=pm,
-        )
-        if _needs_remap(snaps) else {}
-    )
+    plan = _plan_scan(out_dir, snapshot_id)
+    parts, fill = plan.live, plan.scan.fill or {}
+    pm = part_meta(out_dir, parts=parts, snaps=plan.snaps)
     out: dict = {}
-    for col in meta["columns"]:
+    for col in plan.meta["columns"]:
         mn = mx = None
         nulls: int | None = 0
         rows: int | None = 0
@@ -5033,24 +5001,26 @@ def table_column_stats(out_dir: str, snapshot_id: int | None = None) -> dict:
             n = d["n_rows"]
             if rows is not None:
                 rows += n
-            gh, al = remap.get(p, (frozenset(), {}))
+            # the plan's per-part column resolution, same rule as decode:
+            # a renamed column's stats live under its STORAGE name in old
+            # parts; a dropped-and-re-added column's old parts (ghosts)
+            # and parts predating an add-column evolution (null
+            # accounting present, column absent) hold no values for it —
+            # they read the add_column default, else all-NULL
+            gh, al = plan.remap.get(p, _NO_REMAP)
             c = al.get(col, col)
-            if col in gh:
-                nc = n  # retired field: this part reads all-NULL
-            elif c in d["nulls"]:
-                nc = d["nulls"][c]
-            elif d["nulls"]:
-                # null accounting present but column absent: the part
-                # predates an add-column evolution — every row is NULL
-                nc = n
+            st = d["stats"].get(c)
+            if col in gh or (d["nulls"] and c not in d["nulls"]):
+                dv = fill.get(col)
+                nc = n if dv is None else 0
+                st = [dv, dv] if dv is not None and n else None
             else:
-                nc = None  # legacy lineage without null accounting
+                nc = d["nulls"].get(c)  # None: legacy lineage, no accounting
             if nc is None:
                 exact = False
                 nulls = None
             elif nulls is not None:
                 nulls += nc
-            st = None if col in gh else d["stats"].get(c)
             if st is not None:
                 mn = st[0] if mn is None or st[0] < mn else mn
                 mx = st[1] if mx is None or st[1] > mx else mx
@@ -5360,10 +5330,9 @@ def fast_forward(out_dir: str, name: str) -> dict:
     appended = _branch_appended(walked, live_b, added)
     pm = part_meta(out_dir, parts=sorted(set(added) | set(removed)), snaps=snaps)
     delta = _rows_delta(pm, added, removed, f"fast_forward({name!r})")
-    ss = snapshot_schema(out_dir, btip, snaps=snaps)
-    if ss is None:
-        m = _read_json(_j(out_dir, "_table_meta.json"))
-        ss = (m["columns"], m["schema"])
+    at, _, _ = _resolve_snapshot_meta(
+        out_dir, _read_json(_j(out_dir, "_table_meta.json")), btip, snaps
+    )
     entry = {
         "new_parts": added,
         "removed_parts": removed,
@@ -5373,8 +5342,7 @@ def fast_forward(out_dir: str, name: str) -> dict:
         "layout": by_id[btip].get("layout", "clustered"),
         "fast_forward_of": name,
         "ff_from": btip,
-        "columns": ss[0],
-        "schema": ss[1],
+        **_entry_schema(at),
         "ts": time.time(),
     }
     bf = snapshot_field_ids(out_dir, btip, snaps=snaps)
@@ -5612,10 +5580,9 @@ def rebase_branch(out_dir: str, name: str, spark: SparkSession | None = None) ->
     pm = part_meta(out_dir, parts=sorted(set(added) | set(removed)),
                    snaps=snaps)
     delta = _rows_delta(pm, added, removed, f"rebase_branch({name!r})")
-    ss = snapshot_schema(out_dir, btip, snaps=snaps)
-    if ss is None:
-        m = _read_json(_j(out_dir, "_table_meta.json"))
-        ss = (m["columns"], m["schema"])
+    at, _, _ = _resolve_snapshot_meta(
+        out_dir, _read_json(_j(out_dir, "_table_meta.json")), btip, snaps
+    )
     entry = {
         "new_parts": added,
         "removed_parts": removed,
@@ -5624,8 +5591,7 @@ def rebase_branch(out_dir: str, name: str, spark: SparkSession | None = None) ->
         "enc_bytes": 0,
         "layout": by_id[btip].get("layout", "clustered"),
         "rebase_of": btip,
-        "columns": ss[0],
-        "schema": ss[1],
+        **_entry_schema(at),
         "ts": time.time(),
     }
     bf = snapshot_field_ids(out_dir, btip, snaps=snaps)

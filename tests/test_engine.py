@@ -1258,10 +1258,9 @@ def test_upsert_commits_one_atomic_snapshot(spark, tmp_path):
 
     from sparkcodec.engine import (
         _copy_on_write_delete,
-        _load_live,
+        _plan_rewrite,
         decode_table,
         encode_table,
-        prune_parts,
         snapshots,
         upsert_rows,
     )
@@ -1277,9 +1276,8 @@ def test_upsert_commits_one_atomic_snapshot(spark, tmp_path):
 
     # simulate a crash BETWEEN the rewrite and the commit: run the
     # rewrite with commit=False and stop — the upsert's actual first step
-    meta, live = _load_live(out, "id")
-    affected = prune_parts(out, ("id", 100, 109), live)
-    assert affected
+    plan = _plan_rewrite(out, [("id", 100, 109)])
+    assert plan.parts
 
     def mask(tbl):
         import pyarrow.compute as pc
@@ -1291,7 +1289,7 @@ def test_upsert_commits_one_atomic_snapshot(spark, tmp_path):
         )
 
     rep = _copy_on_write_delete(
-        spark, out, affected, live, meta, mask, ["id", 100, 109], commit=False
+        spark, out, plan, mask, ["id", 100, 109], commit=False
     )
     assert rep["pending"]["removed_parts"], rep
     # reader still sees the COMPLETE pre-merge table, and the aborted
