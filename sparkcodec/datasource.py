@@ -401,6 +401,7 @@ class _PartCommit(WriterCommitMessage):
     n_rows: int
     raw_bytes: int
     enc_bytes: int
+    lineage: str = ""  # the part's checkpoint lineage (manifest input)
 
 
 class SparkcodecWriter(DataSourceArrowWriter):
@@ -410,8 +411,17 @@ class SparkcodecWriter(DataSourceArrowWriter):
     and the driver commits one snapshot only after every task's parts
     are durable. Clustering/salting/skew-fanout need a job-level
     exchange a per-task writer cannot express — use
-    ``engine.encode_table`` for those. Single writer at a time (part
-    ids are assigned from a driver-side base)."""
+    ``engine.encode_table`` for those.
+
+    The writer holds the table's single-writer lease from planning
+    (driver-side ``__init__``) through ``commit()``/``abort()``. Part
+    ids come from the engine's shared allocator
+    (``engine._next_part_base``), so an optimistic writer's reserved
+    range and a crashed append's planned range are never written into.
+    The commit publishes through ``engine._commit_snapshot_entry`` like
+    every engine write: the tasks ship each part's lineage back in
+    their commit messages, so the manifest folds it without re-reading
+    a checkpoint, and manifest consolidation applies."""
 
     def __init__(self, options, schema, overwrite):
         if overwrite:
@@ -427,7 +437,7 @@ class SparkcodecWriter(DataSourceArrowWriter):
         from pyspark.sql.pandas.types import to_arrow_schema
 
         from .codecs import type_name
-        from .engine import _acquire_writer_lock, _exists, _j, completed_parts
+        from .engine import _acquire_writer_lock, _exists, _j, _next_part_base
 
         arrow = to_arrow_schema(schema)
         self.columns = [f.name for f in arrow]
@@ -453,12 +463,8 @@ class SparkcodecWriter(DataSourceArrowWriter):
                 from .engine import _field_ids_of
 
                 self.field_ids = _field_ids_of(prev)[0]
-        # single-writer lease held from planning (driver-side __init__)
-        # through commit()/abort(); part ids are assigned from a
-        # driver-side base, so a concurrent writer would collide
         self._lock_owner = _acquire_writer_lock(self.out_dir, "ds-write")
-        existing = completed_parts(self.out_dir)
-        self.base = (max(existing) + 1) if existing else 0
+        self.base = _next_part_base(self.out_dir)
 
     def write(self, iterator):
         from pyspark import TaskContext
@@ -474,38 +480,39 @@ class SparkcodecWriter(DataSourceArrowWriter):
             self.block_rows, self.block_bytes, set(), {},
             field_ids=self.field_ids,
         )
-        return _PartCommit(pid, r["n_rows"], r["raw_bytes"], r["enc_bytes"])
+        return _PartCommit(pid, r["n_rows"], r["raw_bytes"], r["enc_bytes"],
+                           r["lineage"])
 
     def commit(self, messages):
         import time
 
         from .engine import (
-            _atomic_write_json,
+            _commit_snapshot_entry,
+            _entry_schema,
             _exists,
             _j,
+            _prune_meta_of,
             _release_writer_lock,
-            _snapshot_log_append,
+            legacy_root_parts,
+            merge_evolved_meta,
             snapshots,
         )
 
         try:
-            parts = sorted(m.part_id for m in messages if m and m.part_id >= 0)
-            meta_path = _j(self.out_dir, "_table_meta.json")
-            if _exists(meta_path):
-                prev = _load_meta(self.out_dir)
-                if prev["schema"] != self.type_names:
-                    # add-column evolution validated in __init__: merge meta
-                    # through the shared engine helper so readers see the
-                    # union (old parts decode the new columns as nulls) and
-                    # existing field metadata survives
-                    from .engine import merge_evolved_meta
-
-                    _atomic_write_json(
-                        meta_path,
-                        merge_evolved_meta(prev, self.type_names, self.columns),
+            done = [m for m in messages if m and m.part_id >= 0]
+            parts = sorted(m.part_id for m in done)
+            evolved = None
+            if _exists(_j(self.out_dir, "_table_meta.json")):
+                meta = _load_meta(self.out_dir)
+                if meta["schema"] != self.type_names:
+                    # add-column evolution validated in __init__: the
+                    # merged meta (readers see the union; old parts decode
+                    # the new columns as nulls) publishes with the entry
+                    meta = evolved = merge_evolved_meta(
+                        meta, self.type_names, self.columns
                     )
-            if not _exists(meta_path):
-                meta = {
+            else:
+                meta = evolved = {
                     "schema": self.type_names,
                     "columns": self.columns,
                     "num_parts": -1,
@@ -520,37 +527,27 @@ class SparkcodecWriter(DataSourceArrowWriter):
                     "next_field_id": max(self.field_ids.values(), default=0) + 1,
                     "engine_version": "0.1.0",
                 }
-                _atomic_write_json(meta_path, meta)
-            snaps = snapshots(self.out_dir)
-            if not snaps:
+            if not snapshots(self.out_dir):
                 # pre-snapshot table (parts exist but no log): this entry
                 # becomes the root snapshot (shared engine rule)
-                from .engine import legacy_root_parts
-
                 parts = legacy_root_parts(self.out_dir, parts, self.base)
-            cur = _load_meta(self.out_dir)
-            from .engine import _entry_schema, _tip_entry, write_manifest
-
             entry = {
-                # ids are log-sequence; the parent is the MAIN tip (a
-                # trailing branch commit is a bystander to this sink)
-                "id": (snaps[-1]["id"] + 1) if snaps else 1,
-                "parent": _tip_entry(snaps)["id"] if snaps else 0,
                 "new_parts": parts,
-                # pruning manifest (O(#snapshots) metadata reads for
-                # every future pruned read); O(this commit's parts)
-                # checkpoint reads here, amortized like the engine path
-                "manifest": write_manifest(self.out_dir, parts),
-                "n_rows": sum(m.n_rows for m in messages if m),
-                "enc_bytes": sum(m.enc_bytes for m in messages if m),
+                "n_rows": sum(m.n_rows for m in done),
+                "enc_bytes": sum(m.enc_bytes for m in done),
                 "layout": "aligned",
                 # schema versioned per snapshot (time travel reads the
                 # schema in effect at commit time, engine.snapshot_schema)
-                **_entry_schema(cur),
+                **_entry_schema(meta),
                 "field_ids": self.field_ids,
                 "ts": time.time(),
             }
-            _snapshot_log_append(self.out_dir, entry)
+            # the parent is the MAIN tip (a trailing branch commit is a
+            # bystander to this sink)
+            _commit_snapshot_entry(
+                self.out_dir, entry, append=True, evolved_meta=evolved,
+                pm={m.part_id: _prune_meta_of(m.lineage, m.n_rows) for m in done},
+            )
         finally:
             _release_writer_lock(self.out_dir, self._lock_owner)
 

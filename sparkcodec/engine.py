@@ -45,6 +45,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from .codecs import decode_array, encode_array
 from .codecs.api import type_name
@@ -653,11 +654,12 @@ def _acquire_writer_lock_blocking(
 
 
 # ---------------------------------------------------------------------------
-# part-id range reservations (optimistic writers)
+# part ids: one allocator (exclusive writers) and range reservations
+# (optimistic writers)
 #
 # An optimistic writer encodes WITHOUT the table lock, so two of them (or
-# one plus an exclusive writer that computes base = max(completed)+1 under
-# the lock) must never write the same blocks/<col>/part_<id>.parquet. The
+# one plus an exclusive writer that takes its base from _next_part_base
+# under the lock) must never write the same blocks/<col>/part_<id>.parquet. The
 # reservation is a tiny conditional-PUT object `_reservations/<base>.json`
 # claiming the half-open id range [base, base+n): exactly one claimant
 # wins a given base (fs.create_exclusive — O_EXCL locally, If-None-Match
@@ -724,49 +726,35 @@ def reserve_part_range(
     PUT; returns the reservation record. See the section comment.
 
     The claim itself runs under a BRIEF writer-lease acquisition: an
-    exclusive append computes its base = max(completed)+1 while holding
-    that lease for its whole run, so a reservation taken lock-free could
-    land on the same base the in-flight exclusive run already planned
-    (its parts have no checkpoints yet — invisible to the floor scan)
-    and two writers would write the same part files. Holding the lease
-    for the floor-scan + conditional-PUT linearizes reservations against
-    exclusive planning; optimistic writers still overlap each other (the
-    lease is held only for this tiny step). A ``_pending_append.json``
-    seen here therefore belongs to a CRASHED exclusive append (a live
-    one would be holding the lease): its planned id range is respected
-    when its part count is recorded, else the reservation refuses and
-    points at the resume/vacuum remedies."""
+    exclusive writer takes its base from :func:`_next_part_base` and
+    holds that lease for its whole run, so a reservation taken lock-free
+    could land on the same base the in-flight exclusive run already
+    planned (its parts have no checkpoints yet — invisible to the floor
+    scan) and two writers would write the same part files. Holding the
+    lease for the floor scan + conditional PUT linearizes reservations
+    against exclusive planning; optimistic writers still overlap each
+    other (the lease is held only for this tiny step). A
+    ``_pending_append.json`` seen here therefore belongs to a CRASHED
+    exclusive append (a live one would be holding the lease): the floor
+    respects its planned id range when its part count is recorded, else
+    the reservation refuses and points at the resume/vacuum remedies."""
     fs = _get_fs(out_dir)
     fs.makedirs(_j(out_dir, RESERVDIR))
     tok = _acquire_writer_lock_blocking(out_dir, f"reserve-{op}")
     try:
-        pend_floor = 0
-        pend_path = _j(out_dir, "_pending_append.json")
-        if fs.exists(pend_path):
-            pend = _read_json(pend_path)
-            pn = (pend.get("config") or {}).get("num_parts")
-            if isinstance(pn, int) and pn > 0:
-                pend_floor = pend["base"] + pn
-            else:
-                raise ConcurrentWriterError(
-                    f"cannot reserve a part-id range at {out_dir}: a "
-                    f"crashed exclusive append left _pending_append.json "
-                    f"with an unbounded part count (base "
-                    f"{pend.get('base')}); resume that append, or abandon "
-                    f"it with vacuum_orphans(include_pending=True), before "
-                    f"optimistic writes"
-                )
+        pend = _pending_range(out_dir)
+        if pend is not None and pend[1] is None:
+            raise ConcurrentWriterError(
+                f"cannot reserve a part-id range at {out_dir}: a "
+                f"crashed exclusive append left _pending_append.json "
+                f"with an unbounded part count (base {pend[0]}); resume "
+                f"that append, or abandon it with "
+                f"vacuum_orphans(include_pending=True), before "
+                f"optimistic writes"
+            )
         for _ in range(64):
-            floor = pend_floor
-            done = completed_parts(out_dir)
-            if done:
-                floor = max(floor, max(done) + 1)
-            for s in snapshots(out_dir):
-                np_ = s.get("new_parts") or []
-                if np_:
-                    floor = max(floor, max(np_) + 1)
-            for r in _reservations(out_dir):
-                floor = max(floor, r["base"] + r["n"])
+            _reservations(out_dir)  # drop expired claims: one may sit at the floor
+            floor = _next_part_base(out_dir)
             res = {
                 "base": floor,
                 "n": int(n),
@@ -805,11 +793,33 @@ def release_part_range(out_dir: str, res: dict | None) -> None:
         pass
 
 
-def _base_above_reservations(out_dir: str, floor: int) -> int:
-    """Raise an EXCLUSIVE writer's first part id above every unexpired
-    optimistic reservation: the reserved ranges may have no checkpoints
-    on disk yet (their writer is mid-encode, lock-free), so the usual
-    max(completed)+1 floor cannot see them."""
+def _pending_range(out_dir: str) -> tuple[int, int | None] | None:
+    """``(base, n)`` of the part ids a crashed exclusive append planned,
+    from its ``_pending_append.json`` (None without one); ``n`` is None
+    when the run's part count was not recorded (aligned layout)."""
+    path = _j(out_dir, "_pending_append.json")
+    if not _get_fs(out_dir).exists(path):
+        return None
+    pend = _read_json(path)
+    n = (pend.get("config") or {}).get("num_parts")
+    return pend["base"], (n if isinstance(n, int) and n > 0 else None)
+
+
+def _next_part_base(out_dir: str, live=()) -> int:
+    """THE part-id allocator: the first id above every ``live`` part,
+    every checkpointed part, every part a snapshot entry names, every
+    unexpired reservation (its writer may be mid-encode, lock-free, with
+    no checkpoints on disk yet) and the planned range of a crashed
+    exclusive append whose part count is recorded (its resume writes
+    there). Exclusive writers — the fresh append, compaction, the
+    delete/merge rewrites and the DataSource writer — call it under the
+    writer lease; :func:`reserve_part_range` claims from the same floor."""
+    floor = max([-1, *live, *completed_parts(out_dir)]) + 1
+    for s in snapshots(out_dir):
+        floor = max(floor, max(s.get("new_parts") or [-1]) + 1)
+    pend = _pending_range(out_dir)
+    if pend is not None and pend[1] is not None:
+        floor = max(floor, pend[0] + pend[1])
     for r in _reservations(out_dir, prune_expired=False):
         floor = max(floor, r["base"] + r["n"])
     return floor
@@ -1791,27 +1801,29 @@ def _commit_snapshot_entry(
     branch: str | None = None,
     branch_parent: int | None = None,
 ) -> dict:
-    """Publish a prepared snapshot entry: write the (possibly evolved)
-    table meta and the entry's pruning MANIFEST first, then append the
-    entry with id/parent assigned from the current log tip. The
-    single-line log append is the atomic publish point — everything
-    written before it (parts, evolved meta, manifest) is either
-    invisible (orphans) or benign (an extra nullable column) until the
-    entry lands. Deferring the evolved-meta write to here closes the
-    window where a failed or refused append permanently widened the
-    schema. ``pm`` forwards already-in-hand per-part metadata to
-    :func:`write_manifest` so the encode hot path never re-reads its own
-    checkpoints.
+    """THE snapshot publisher — every commit but ``expire_snapshots``'
+    log rewrite goes through here: write the (possibly evolved) table
+    meta and the entry's pruning MANIFEST first, then append the entry
+    with id/parent assigned from the current log tip. The single-line
+    log append is the atomic publish point — everything written before
+    it (parts, evolved meta, manifest) is either invisible (orphans) or
+    benign (an extra nullable column) until the entry lands. Deferring
+    the evolved-meta write to here closes the window where a failed or
+    refused append permanently widened the schema. ``pm`` forwards
+    already-in-hand per-part metadata (the writers' lineage) to
+    :func:`write_manifest` so no commit re-reads the checkpoints its own
+    run just wrote.
 
-    AUTO-CONSOLIDATION: once every :data:`_CONSOLIDATE_EVERY` main-chain
-    commits since the last full-coverage manifest, the entry's manifest
-    covers the FULL post-commit live set instead of just its new parts
-    (flagged ``manifest_full``) — so part_meta's newest-first early exit
-    bounds a cold pruned read at ≤ _CONSOLIDATE_EVERY manifest opens on
-    a pure-append table that never compacts (compaction/expire
-    consolidate eagerly anyway). Amortized cost: one O(#live) metadata
-    fold per _CONSOLIDATE_EVERY commits, read from the manifests
-    already in hand."""
+    FULL-COVERAGE manifests: an entry flagged ``compaction`` (compaction,
+    optimize) covers the survivors at the tip it lands on plus its new
+    parts, so part_meta's newest-first early exit satisfies any later
+    pruned read from this one file (the Iceberg rewrite_manifests
+    idiom). Other main-chain commits do the same once every
+    :data:`_CONSOLIDATE_EVERY` commits since the last full-coverage
+    manifest (AUTO-CONSOLIDATION), so a cold pruned read of a pure-append
+    table that never compacts opens ≤ _CONSOLIDATE_EVERY manifests.
+    Both are flagged ``manifest_full``; the survivors' metadata folds
+    from the manifests already in hand."""
     if evolved_meta is not None:
         _atomic_write_json(_j(out_dir, "_table_meta.json"), evolved_meta)
     e = dict(entry)
@@ -1819,7 +1831,8 @@ def _commit_snapshot_entry(
     if (
         e.get("new_parts") and not e.get("manifest")
         and branch is None and append and snaps
-        and _manifests_since_full(snaps) + 1 >= _CONSOLIDATE_EVERY
+        and (e.get("compaction")
+             or _manifests_since_full(snaps) + 1 >= _CONSOLIDATE_EVERY)
     ):
         prior = snapshot_parts(out_dir, _tip_entry(snaps)["id"], snaps=snaps)
         survivors = sorted(
@@ -1860,65 +1873,20 @@ def _commit_snapshot_entry(
     return e
 
 
-def _commit_optimistic_append(
-    out_dir: str,
-    entry: dict,
-    meta: dict,
-    pm: dict | None,
-    res: dict | None,
-) -> dict:
-    """The short validated critical section of an optimistic append: take
-    the writer lease (waiting out other committers), re-resolve the
-    table meta AT THE COMMIT POINT — a concurrent writer may have
-    evolved it since this run planned, so evolution is re-checked and
-    re-merged against the CURRENT meta (never the stale one this run
-    started from, which would clobber a concurrent widen) — publish the
-    entry on the current tip, then release the lease and the part-range
-    reservation. An append adds only its reserved parts, so it never
-    conflicts on data; the only refusal is a genuine schema conflict
-    (retyped shared column), surfaced by check_schema_evolution."""
+def _commit_validated(out_dir: str, check, res: dict | None, pm=None) -> dict:
+    """The short validated critical section of every optimistic commit:
+    take the writer lease (waiting out other committers), re-read the
+    table meta and the live set AT THE COMMIT POINT, run the operation's
+    ``check(meta, live) -> (entry, evolved_meta)`` — which refuses on a
+    real conflict — publish on the current tip, then release the lease
+    and the part-range reservation. A refused commit keeps its
+    reservation, so its orphan parts stay protected until vacuum."""
     tok = _acquire_writer_lock_blocking(out_dir, "commit")
     try:
-        cur = _read_json(_j(out_dir, "_table_meta.json"))
-        evolved = None
-        if cur["schema"] != meta["schema"] or cur["columns"] != meta["columns"]:
-            check_schema_evolution(cur, meta["schema"], meta["columns"])
-            evolved = merge_evolved_meta(
-                cur, meta["schema"], meta["columns"],
-                meta.get("field_metadata"),
-            )
-            # the entry becomes the TIP, and default reads overlay the
-            # tip entry's schema — stamping the planning-time schema
-            # would hide a column a CONCURRENT commit added (its rows
-            # would become unreadable at this tip); stamp the merged
-            # union instead (same rule as compact's optimistic commit)
-            entry = dict(
-                entry, **_entry_schema(evolved), field_ids=evolved["field_ids"]
-            )
-            # the PARTS of this run stamped planning-time field ids into
-            # their checkpoints (and `pm`, about to become the manifest).
-            # If the re-merge assigned any of this run's columns a
-            # DIFFERENT id — two concurrent writers each adding a column
-            # both allocate the same next_field_id — committing would
-            # persist conflicting identities: once a later drop/rename
-            # activates the remap, _column_remap would resolve by the
-            # stale per-part ids and could alias one column's reads onto
-            # another's blocks or falsely ghost it. Refuse loudly; the
-            # reservation keeps the orphan parts protected until vacuum.
-            stale = {
-                c: (meta["field_ids"].get(c), evolved["field_ids"].get(c))
-                for c in meta["columns"]
-                if meta["field_ids"].get(c) != evolved["field_ids"].get(c)
-            }
-            if stale:
-                raise ConcurrentWriterError(
-                    "optimistic append refused: a concurrent schema "
-                    "change re-assigned field ids this run already "
-                    f"stamped into its parts ({stale}); re-run the "
-                    "append with the default exclusive concurrency — "
-                    "its parts stay protected behind the reservation "
-                    "until vacuum reclaims them"
-                )
+        entry, evolved = check(
+            _read_json(_j(out_dir, "_table_meta.json")),
+            set(snapshot_parts(out_dir) or ()),
+        )
         e = _commit_snapshot_entry(
             out_dir, entry, append=True, evolved_meta=evolved, pm=pm
         )
@@ -1928,28 +1896,80 @@ def _commit_optimistic_append(
     return e
 
 
+def _commit_optimistic_append(
+    out_dir: str,
+    entry: dict,
+    meta: dict,
+    pm: dict | None,
+    res: dict | None,
+) -> dict:
+    """Commit an optimistic append (:func:`_commit_validated`). Its check
+    re-resolves evolution against the CURRENT table meta — a concurrent
+    writer may have evolved it since this run planned, and merging into
+    the stale planning meta would clobber a concurrent widen. An append
+    adds only its reserved parts, so it never conflicts on data; it
+    refuses a retyped shared column (check_schema_evolution) and a
+    field-id conflict."""
+
+    def check(cur, _live):
+        if cur["schema"] == meta["schema"] and cur["columns"] == meta["columns"]:
+            return entry, None
+        check_schema_evolution(cur, meta["schema"], meta["columns"])
+        evolved = merge_evolved_meta(
+            cur, meta["schema"], meta["columns"], meta.get("field_metadata"),
+        )
+        # the PARTS of this run stamped planning-time field ids into
+        # their checkpoints (and `pm`, about to become the manifest).
+        # If the re-merge assigned any of this run's columns a
+        # DIFFERENT id — two concurrent writers each adding a column
+        # both allocate the same next_field_id — committing would
+        # persist conflicting identities: once a later drop/rename
+        # activates the remap, _column_remap would resolve by the stale
+        # per-part ids and could alias one column's reads onto another's
+        # blocks or falsely ghost it. Refuse loudly.
+        stale = {
+            c: (meta["field_ids"].get(c), evolved["field_ids"].get(c))
+            for c in meta["columns"]
+            if meta["field_ids"].get(c) != evolved["field_ids"].get(c)
+        }
+        if stale:
+            raise ConcurrentWriterError(
+                "optimistic append refused: a concurrent schema "
+                "change re-assigned field ids this run already "
+                f"stamped into its parts ({stale}); re-run the "
+                "append with the default exclusive concurrency — "
+                "its parts stay protected behind the reservation "
+                "until vacuum reclaims them"
+            )
+        # the entry becomes the TIP, and default reads overlay the tip
+        # entry's schema — stamping the planning-time schema would hide
+        # a column a CONCURRENT commit added; stamp the merged union
+        return (
+            dict(entry, **_entry_schema(evolved), field_ids=evolved["field_ids"]),
+            evolved,
+        )
+
+    return _commit_validated(out_dir, check, res, pm)
+
+
 def _ensure_snapshot_root(out_dir: str, live: list[int], meta: dict) -> None:
     """Root the snapshot log of a pre-snapshot (legacy) table with its
     current live set BEFORE any copy-on-write rewrite is written: from
     that moment readers resolve the log, so rewritten parts stay
     invisible orphans until their entry commits — without this the
-    completed_parts fallback would show survivor rows twice."""
+    completed_parts fallback would show survivor rows twice. The root's
+    manifest is a one-time O(live) checkpoint fold: every pruned read of
+    this legacy table afterwards is O(#manifests)."""
     if snapshots(out_dir):
         return
-    root = {
-        "id": 1,
-        "parent": 0,
+    _commit_snapshot_entry(out_dir, {
         "new_parts": sorted(live),
         "n_rows": 0,
         "enc_bytes": 0,
         "layout": meta.get("layout", "clustered"),
         **_entry_schema(meta),
-        # one-time O(live) checkpoint fold: every pruned read of this
-        # legacy table afterwards is O(#manifests)
-        "manifest": write_manifest(out_dir, sorted(live)),
         "ts": time.time(),
-    }
-    _snapshot_log_append(out_dir, root)
+    }, append=False)
 
 
 def completed_parts(out_dir: str) -> set[int]:
@@ -2272,9 +2292,10 @@ def encode_table(
             evolved_meta = meta
         existing = completed_parts(out_dir)
         if optimistic:
-            # lock-free: disjointness by reservation, not by lock-held
-            # max(completed)+1; no shared pending marker (two optimistic
-            # appends would clobber it), hence no crashed-run resume
+            # lock-free: disjointness by reservation, not by the
+            # lock-held _next_part_base; no shared pending marker (two
+            # optimistic appends would clobber it), hence no crashed-run
+            # resume
             res = reserve_part_range(out_dir, num_parts, "encode")
             base = res["base"]
             done = set()
@@ -2298,15 +2319,16 @@ def encode_table(
                 )
             base = pend["base"]
         else:
-            base = _base_above_reservations(
-                out_dir, (max(existing) + 1) if existing else 0
-            )
+            base = _next_part_base(out_dir, existing)
             _atomic_write_json(
                 pending_path,
                 {"base": base, "config": run_config, "branch": branch},
             )
+        # a resume adopts the checkpointed parts of ITS planned range
+        # only: ids above it belong to writers that ran after the crash
+        end = base + num_parts if num_parts > 0 else float("inf")
         done = (
-            {p for p in existing if p >= base}
+            {p for p in existing if base <= p < end}
             if resume and not optimistic
             else set()
         )
@@ -3728,6 +3750,98 @@ def watch_encode(out_dir: str, num_parts: int | None = None, interval: float = 1
 # ~8 MB — see BENCH.md)
 
 
+# the part-rewrite job's summary row (see _PartRewrite.group)
+_REWRITE_ARROW = pa.schema([
+    ("old_pid", pa.int32()), ("new_pid", pa.int32()),
+    ("n_before", pa.int64()), ("n_after", pa.int64()),
+    ("enc_bytes", pa.int64()), ("lineage", pa.string()),
+])
+
+
+@dataclass
+class _PartRewrite:
+    """The body of the part-rewrite job (compaction, delete, merge),
+    shipped in its closure: the plan's whole-part reader, the plan
+    entries of the parts to rewrite, and the snapshot's column names,
+    block size and field ids the new parts are encoded under — so a
+    dropped-and-re-added column's old parts decode as NULL (never
+    resurrected), renamed columns read from their storage names and
+    add_column defaults materialize."""
+
+    scan: _PartScan
+    entry_of: dict
+    columns: list
+    block_rows: int
+    field_ids: dict
+
+    @classmethod
+    def of(cls, plan: _ScanPlan, parts) -> "_PartRewrite":
+        return cls(
+            plan.scan.unpruned(), {e[0]: e for e in plan.entries(parts)},
+            plan.meta["columns"], plan.meta.get("block_rows") or 65536,
+            _field_ids_of(plan.meta)[0],
+        )
+
+    def group(self, pids, new_pid: int, mask_fn=None) -> dict:
+        """Decode the parts ``pids`` as one table, drop the rows
+        ``mask_fn`` marks (arrow Table -> null-safe boolean mask of rows
+        to DELETE) and encode the rest as part ``new_pid``. Without a
+        mask the part is always written (compaction); with one only when
+        some rows were dropped and some remain. Returns the job's
+        summary row (``new_pid`` -1: nothing written)."""
+        import pyarrow.compute as pc
+
+        tbl = pa.Table.from_batches(
+            [b for p in pids for b in self.scan.batches(self.entry_of[p])],
+            schema=self.scan.arrow_schema,
+        )
+        n_before = tbl.num_rows
+        if mask_fn is not None:
+            tbl = tbl.filter(pc.invert(mask_fn(tbl)))
+        row = {"old_pid": int(pids[0]), "new_pid": -1, "n_before": n_before,
+               "n_after": tbl.num_rows, "enc_bytes": 0, "lineage": ""}
+        if mask_fn is None or 0 < tbl.num_rows < n_before:
+            r = _encode_one_part(
+                new_pid, tbl.to_batches(max_chunksize=65536), self.columns,
+                self.scan.out_dir, self.block_rows, 32 << 20, set(), {},
+                field_ids=self.field_ids,
+            )
+            row.update(new_pid=new_pid, enc_bytes=r["enc_bytes"],
+                       lineage=r["lineage"])
+        return row
+
+
+def _rewrite_parts(spark, plan: _ScanPlan, groups, base: int, mask_fn=None):
+    """THE part-rewrite job: group ``i`` of ``groups`` (lists of
+    ``plan``'s live part ids) becomes part ``base + i`` through
+    :meth:`_PartRewrite.group`. Driven by ``spark.range`` with the group
+    list in the kernel closure — no pickled driver table, no exchange.
+    Returns the summary rows (:func:`_rewrite_pm` turns their lineage
+    into the commit's manifest input)."""
+    body = _PartRewrite.of(plan, sorted({p for g in groups for p in g}))
+
+    def kernel(batches):
+        for batch in batches:
+            for i in batch.column(0).to_pylist():
+                yield pa.RecordBatch.from_pylist(
+                    [body.group(groups[i], base + i, mask_fn)],
+                    schema=_REWRITE_ARROW,
+                )
+
+    n_tasks = max(1, min(len(groups), 4 * spark.sparkContext.defaultParallelism))
+    return [
+        r.asDict() for r in spark.range(0, len(groups), 1, n_tasks)
+        .mapInArrow(kernel, from_arrow_schema(_REWRITE_ARROW)).collect()
+    ]
+
+
+def _rewrite_pm(rows) -> dict:
+    return {
+        r["new_pid"]: _prune_meta_of(r["lineage"], r["n_after"])
+        for r in rows if r["new_pid"] >= 0
+    }
+
+
 @_with_concurrency("compact")
 def compact_table(
     spark: SparkSession,
@@ -3790,99 +3904,40 @@ def compact_table(
     if not groups:
         return {"groups": 0, "parts_removed": 0, "parts_created": 0}
 
-    res = None
-    if optimistic:
-        # lock-free rewrite: new-part ids come from a range reservation,
-        # so neither a concurrent exclusive append (base computed under
-        # the lock) nor another reservation can collide with ours
-        res = reserve_part_range(out_dir, len(groups), "compact")
-        base = res["base"]
-    else:
-        base = _base_above_reservations(
-            out_dir,
-            max(max(live), max(completed_parts(out_dir), default=0)) + 1,
-        )
-    columns = meta["columns"]
-    block_rows = meta.get("block_rows") or 65536
-    # field-id identity through the rewrite: the plan's reader decodes a
-    # dropped-and-re-added column's old parts as NULL (never resurrected
-    # into the merged copy), renamed columns from their storage names and
-    # add_column defaults materialized; the merged parts carry the
-    # snapshot's ids under its names
-    cur_fids, _ = _field_ids_of(meta)
-    scan, entry_of = plan.scan, {e[0]: e for e in plan.entries(live)}
-    plan_rows = [(base + i, json.dumps(g)) for i, g in enumerate(groups)]
-    plan_df = spark.createDataFrame(plan_rows, "new_pid int, grp string").repartition(
-        max(1, min(len(plan_rows), 4 * spark.sparkContext.defaultParallelism))
-    )
-
-    def kernel(batches):
-        for batch in batches:
-            for new_pid, grp in zip(
-                batch.column("new_pid").to_pylist(), batch.column("grp").to_pylist()
-            ):
-                merged = []
-                for pid in json.loads(grp):
-                    merged.extend(scan.batches(entry_of[pid]))
-                r = _encode_one_part(
-                    new_pid, merged, columns, out_dir, block_rows, 32 << 20,
-                    set(), {}, field_ids=cur_fids,
-                )
-                yield pa.RecordBatch.from_pylist(
-                    [{k: r[k] for k in ("part_id", "n_rows", "raw_bytes", "enc_bytes")}],
-                    schema=pa.schema(
-                        [("part_id", pa.int32()), ("n_rows", pa.int64()),
-                         ("raw_bytes", pa.int64()), ("enc_bytes", pa.int64())]
-                    ),
-                )
-
-    summary = plan_df.mapInArrow(
-        kernel, "part_id int, n_rows long, raw_bytes long, enc_bytes long"
-    ).collect()
+    # lock-free rewrite: new-part ids come from a range reservation, so
+    # neither a concurrent exclusive writer nor another reservation can
+    # collide with ours
+    res = reserve_part_range(out_dir, len(groups), "compact") if optimistic else None
+    base = res["base"] if optimistic else _next_part_base(out_dir, live)
+    summary = _rewrite_parts(spark, plan, groups, base)
+    pm = _rewrite_pm(summary)
     removed = sorted(p for g in groups for p in g)
-    created = sorted(r["part_id"] for r in summary)
-    body = {
+    created = sorted(pm)
+    # the commit gives the compaction-flagged entry a manifest covering
+    # the full post-compaction live set (see _commit_snapshot_entry)
+    entry = {
         "new_parts": created,
         "removed_parts": removed,
-        "n_rows": sum(r["n_rows"] for r in summary),
+        "n_rows": sum(r["n_after"] for r in summary),
         "enc_bytes": sum(r["enc_bytes"] for r in summary),
         "layout": meta.get("layout", "clustered"),
         **_entry_schema(meta),
-        "field_ids": cur_fids,
+        "field_ids": _field_ids_of(meta)[0],
         "compaction": True,
         "ts": time.time(),
     }
     if not optimistic:
-        # CONSOLIDATED manifest: cover the full post-compaction live set
-        # (survivors folded from the older manifests + the merged parts
-        # from their fresh checkpoints), so part_meta's newest-first
-        # early exit satisfies any later pruned read from THIS one file —
-        # a 10k-commit table stops paying a 10k-manifest cold-driver read
-        # at its next compaction (the Iceberg rewrite_manifests idiom).
-        # The exclusive path holds the writer lease, so vacuum/expire
-        # (also lease holders) cannot sweep the not-yet-referenced file.
-        # The OPTIMISTIC path defers this into its critical section
-        # below: written lock-free it would sit unreferenced while a
-        # concurrent vacuum runs, get swept, and every future pruned
-        # read of this entry would fall back to O(parts) checkpoints.
-        survivors = sorted(set(live) - set(removed))
-        body["manifest"] = write_manifest(
-            out_dir,
-            survivors + created,
-            pm=part_meta(out_dir, parts=survivors),
-        )
-        body["manifest_full"] = True
-    if optimistic:
+        _commit_snapshot_entry(out_dir, entry, append=True, pm=pm)
+    else:
         if _pre_commit_hook is not None:
             _pre_commit_hook()
-        tok = _acquire_writer_lock_blocking(out_dir, "commit")
-        try:
-            # validate AT THE TIP: every part this rewrite replaces must
-            # still be live there — concurrent appends are fine (their
-            # parts are untouched and stay live through this entry), but
-            # a DELETE/MERGE/compaction that removed or rewrote any of
+
+        def check(cur_meta, cur_live):
+            # every part this rewrite replaces must still be live at the
+            # tip — concurrent appends are fine (their parts are
+            # untouched and stay live through this entry), but a
+            # DELETE/MERGE/compaction that removed or rewrote any of
             # them makes our merged copies resurrect dead rows
-            cur_live = set(snapshot_parts(out_dir) or ())
             gone = sorted(p for p in removed if p not in cur_live)
             if gone:
                 raise ConcurrentWriterError(
@@ -3896,36 +3951,9 @@ def compact_table(
             # schema may have evolved concurrently (nullable widen by an
             # append); compaction never changes schema, so stamp the
             # entry with the CURRENT meta, not the planning-time one
-            cur_meta = _read_json(_j(out_dir, "_table_meta.json"))
-            snaps = snapshots(out_dir)
-            # consolidated like the exclusive path, but against the
-            # CURRENT tip's survivors (concurrent appends since planning
-            # are covered too — their stats fold from their own fresh
-            # manifests); written INSIDE the lease: vacuum/expire also
-            # hold it, so the file can never sit unreferenced in front
-            # of a concurrent sweep (it becomes referenced by the log
-            # append below, atomically w.r.t. them)
-            cur_survivors = sorted(cur_live - set(removed))
-            entry = dict(
-                body,
-                **_entry_schema(cur_meta),
-                manifest=write_manifest(
-                    out_dir,
-                    cur_survivors + created,
-                    pm=part_meta(out_dir, parts=cur_survivors, snaps=snaps),
-                ),
-                manifest_full=True,
-                id=snaps[-1]["id"] + 1,
-                parent=_tip_entry(snaps)["id"],
-            )
-            _snapshot_log_append(out_dir, entry)
-        finally:
-            _release_writer_lock(out_dir, tok)
-        release_part_range(out_dir, res)
-    else:
-        snaps = snapshots(out_dir)  # never empty: rooted above
-        entry = dict(body, id=snaps[-1]["id"] + 1, parent=_tip_entry(snaps)["id"])
-        _snapshot_log_append(out_dir, entry)
+            return dict(entry, **_entry_schema(cur_meta)), None
+
+        _commit_validated(out_dir, check, res, pm)
     return {
         "groups": len(groups),
         "parts_removed": len(removed),
@@ -4048,22 +4076,14 @@ def optimize_table(
     entry = dict(pend["entry"])
     entry.update({
         "removed_parts": sorted(affected),
-        "compaction": True,  # changefeed: rearranged rows, not new data
+        # changefeed: rearranged rows, not new data; the commit gives the
+        # entry a manifest over the full live set (survivors included)
+        "compaction": True,
         "optimize": {"zorder_by": zorder_by, "sort_by": sort_by,
                      "cluster_by": cluster_by,
                      "partial": where is not None},
         "ts": time.time(),
     })
-    if where is not None:
-        # partial rewrite: consolidate the manifest over survivors too
-        # (same rule as compact_table), so the entry alone satisfies any
-        # later cold pruned read via part_meta's newest-first early exit
-        survivors = sorted(set(live) - set(affected))
-        entry["manifest"] = write_manifest(
-            out_dir, survivors + entry["new_parts"],
-            pm={**part_meta(out_dir, parts=survivors), **(pend.get("pm") or {})},
-        )
-        entry["manifest_full"] = True
     # table meta tracks the NEW clustering (informational + resume
     # identity) — but only for a FULL rewrite: a partial optimize leaves
     # a mixed layout, so the table-level clustering claim must not change
@@ -4105,7 +4125,8 @@ def _copy_on_write_delete(
     """Shared copy-on-write rewrite for row-level delete/merge: decode
     each affected part (``plan.parts`` of the ``plan.live`` set), drop
     the rows ``mask_fn`` marks (a picklable callable: the part's arrow
-    Table -> boolean mask of rows to DELETE, null-safe), re-encode survivors under new part ids, and commit one
+    Table -> boolean mask of rows to DELETE, null-safe), re-encode
+    survivors under new part ids (:func:`_rewrite_parts`), and commit one
     snapshot (removed_parts = changed parts only; an untouched part
     keeps its id with no write). ``tag`` is recorded under the entry's
     ``delete`` key so the changefeed skips the rewrite.
@@ -4119,91 +4140,51 @@ def _copy_on_write_delete(
     the job crashed mid-way.
 
     ``commit=False`` skips the snapshot publish and returns the
-    removed/created part ids under ``result["pending"]`` — the merge
-    path folds them with its append into one atomic entry."""
+    removed/created part ids (and the created parts' pruning metadata)
+    under ``result["pending"]`` — the merge path folds them with its
+    append into one atomic entry."""
     meta, live, affected = plan.meta, plan.live, plan.parts
     _ensure_snapshot_root(out_dir, live, meta)
-    base = _base_above_reservations(
-        out_dir, max(max(live), max(completed_parts(out_dir), default=0)) + 1
-    )
-    columns = meta["columns"]
-    block_rows = meta.get("block_rows") or 65536
-    # field-id identity through the rewrite (same rule as compaction):
-    # survivors re-encode under the snapshot's ids and names
-    cur_fids, _ = _field_ids_of(meta)
-    scan, entry_of = plan.scan.unpruned(), {e[0]: e for e in plan.entries()}
-    plan_df = spark.createDataFrame(
-        [(base + i, int(p)) for i, p in enumerate(affected)],
-        "new_pid int, old_pid int",
-    ).repartition(max(1, min(len(affected), 4 * spark.sparkContext.defaultParallelism)))
+    out = _rewrite_result(affected, _rewrite_parts(
+        spark, plan, [[p] for p in affected], _next_part_base(out_dir, live),
+        mask_fn,
+    ))
+    if not commit:
+        return out
+    pend = out.pop("pending")
+    if pend["removed_parts"]:
+        entry = {
+            "new_parts": pend["new_parts"],
+            "removed_parts": pend["removed_parts"],
+            "n_rows": -pend["rows_deleted"],
+            "enc_bytes": 0,
+            "layout": meta.get("layout", "clustered"),
+            **_entry_schema(meta),
+            "field_ids": _field_ids_of(meta)[0],
+            "delete": tag,
+            "ts": time.time(),
+            **(extra or {}),
+        }
+        _commit_snapshot_entry(
+            out_dir, entry, append=True, pm=pend["pm"], branch=branch
+        )
+    return out
 
-    def kernel(batches):
-        import pyarrow.compute as pc
 
-        for batch in batches:
-            for new_pid, old_pid in zip(
-                batch.column("new_pid").to_pylist(), batch.column("old_pid").to_pylist()
-            ):
-                tbl = pa.Table.from_batches(
-                    list(scan.batches(entry_of[old_pid])),
-                    schema=scan.arrow_schema,
-                )
-                keep = tbl.filter(pc.invert(mask_fn(tbl)))
-                n_before, n_after = tbl.num_rows, keep.num_rows
-                wrote = -1
-                if n_after < n_before and n_after > 0:
-                    _encode_one_part(
-                        new_pid, keep.to_batches(max_chunksize=65536), columns,
-                        out_dir, block_rows, 32 << 20, set(), {},
-                        field_ids=cur_fids,
-                    )
-                    wrote = new_pid
-                yield pa.RecordBatch.from_pylist(
-                    [{"old_pid": old_pid, "new_pid": wrote,
-                      "n_before": n_before, "n_after": n_after}],
-                    schema=pa.schema(
-                        [("old_pid", pa.int32()), ("new_pid", pa.int32()),
-                         ("n_before", pa.int64()), ("n_after", pa.int64())]
-                    ),
-                )
-
-    summary = plan_df.mapInArrow(
-        kernel, "old_pid int, new_pid int, n_before long, n_after long"
-    ).collect()
+def _rewrite_result(affected, summary) -> dict:
+    """A copy-on-write rewrite's outcome; ``pending`` holds what its
+    snapshot entry commits: the changed (removed) parts, the written
+    parts and their pruning metadata."""
     removed = sorted(r["old_pid"] for r in summary if r["n_after"] < r["n_before"])
-    created = sorted(r["new_pid"] for r in summary if r["new_pid"] >= 0)
-    deleted = sum(r["n_before"] - r["n_after"] for r in summary)
-    out = {
+    deleted = int(sum(r["n_before"] - r["n_after"] for r in summary))
+    pm = _rewrite_pm(summary)
+    return {
         "parts_scanned": len(affected),
         "parts_rewritten": len(removed),
-        "rows_deleted": int(deleted),
+        "rows_deleted": deleted,
+        "pending": {"removed_parts": removed, "new_parts": sorted(pm),
+                    "rows_deleted": deleted, "pm": pm},
     }
-    if not removed:
-        if not commit:
-            out["pending"] = {"removed_parts": [], "new_parts": [], "rows_deleted": 0}
-        return out
-    entry = {
-        "new_parts": created,
-        "removed_parts": removed,
-        "n_rows": -deleted,
-        "enc_bytes": 0,
-        "layout": meta.get("layout", "clustered"),
-        **_entry_schema(meta),
-        "field_ids": cur_fids,
-        "delete": tag,
-        "ts": time.time(),
-    }
-    if extra:
-        entry.update(extra)
-    if commit:
-        _commit_snapshot_entry(out_dir, entry, append=True, branch=branch)
-    else:
-        out["pending"] = {
-            "removed_parts": removed,
-            "new_parts": created,
-            "rows_deleted": int(deleted),
-        }
-    return out
 
 
 def _plan_rewrite(out_dir: str, wheres, branch: str | None = None) -> _ScanPlan:
@@ -4302,34 +4283,26 @@ def _rewrite_parts_dropping_matched_keys(
        the keys drops out here and keeps its id with no write;
     3. group matched keys by part (``applyInPandas``): each rewrite task
        holds one part's matched keys — memory bounded by that part's own
-       row count, not the incoming batch size — decodes the part, drops
-       the matched rows, re-encodes under its pre-assigned new id.
+       row count, not the incoming batch size — and runs the shared
+       rewrite body (:meth:`_PartRewrite.group`) with a mask of them,
+       under the part's pre-assigned new id.
 
     Returns the same ``pending`` shape as
     ``_copy_on_write_delete(commit=False)``; the caller owns the commit.
     """
-    meta, live, affected = plan.meta, plan.live, plan.parts
-    base = _base_above_reservations(
-        out_dir, max(max(live), max(completed_parts(out_dir), default=0)) + 1
-    )
-    mapping = {int(p): base + i for i, p in enumerate(affected)}
-    columns = meta["columns"]
+    meta, affected = plan.meta, plan.parts
+    base = _next_part_base(out_dir, plan.live)
+    new_pid = {int(p): base + i for i, p in enumerate(affected)}
     key_spark = _SPARK_TYPE_OF[meta["schema"][key_col]]
-    block_rows = meta.get("block_rows") or 65536
-    # field-id identity through the merge rewrite (same rule as compaction)
-    cur_fids, _ = _field_ids_of(meta)
-    scan, entry_of = plan.scan.unpruned(), {e[0]: e for e in plan.entries()}
-    key_scan = scan.unpruned([key_col])
+    body = _PartRewrite.of(plan, affected)
+    key_scan = body.scan.unpruned([key_col])
     key_arrow = key_scan.arrow_schema.field(0).type
-
-    plan_df = spark.createDataFrame(
-        [(int(p),) for p in affected], "old_pid int"
-    ).repartition(max(1, min(len(affected), 4 * spark.sparkContext.defaultParallelism)))
 
     def key_kernel(batches):
         for batch in batches:
-            for pid in batch.column("old_pid").to_pylist():
-                for b in key_scan.batches(entry_of[pid]):
+            for i in batch.column(0).to_pylist():
+                pid = int(affected[i])
+                for b in key_scan.batches(body.entry_of[pid]):
                     yield pa.RecordBatch.from_arrays(
                         [
                             pa.array([pid] * b.num_rows, type=pa.int32()),
@@ -4338,7 +4311,10 @@ def _rewrite_parts_dropping_matched_keys(
                         names=["old_pid", "__k"],
                     )
 
-    part_keys = plan_df.mapInArrow(key_kernel, f"old_pid int, __k {key_spark}")
+    n_tasks = max(1, min(len(affected), 4 * spark.sparkContext.defaultParallelism))
+    part_keys = spark.range(0, len(affected), 1, n_tasks).mapInArrow(
+        key_kernel, f"old_pid int, __k {key_spark}"
+    )
     incoming = (
         df.select(F.col(key_col).cast(key_spark).alias("__k"))
         .where(F.col("__k").isNotNull())
@@ -4354,44 +4330,18 @@ def _rewrite_parts_dropping_matched_keys(
 
         old_pid = int(pdf["old_pid"].iloc[0])
         keys = pa.Array.from_pandas(pdf["__k"]).cast(key_arrow)
-        tbl = pa.Table.from_batches(
-            list(scan.batches(entry_of[old_pid])), schema=scan.arrow_schema
-        )
-        v = tbl.column(key_col)
-        m = pc.and_kleene(pc.is_valid(v), pc.is_in(v, value_set=keys))
-        keep = tbl.filter(pc.invert(m))
-        n_before, n_after = tbl.num_rows, keep.num_rows
-        wrote = -1
-        if n_after < n_before and n_after > 0:
-            _encode_one_part(
-                mapping[old_pid], keep.to_batches(max_chunksize=65536), columns,
-                out_dir, block_rows, 32 << 20, set(), {},
-                field_ids=cur_fids,
-            )
-            wrote = mapping[old_pid]
-        return pd.DataFrame(
-            [{"old_pid": old_pid, "new_pid": wrote,
-              "n_before": n_before, "n_after": n_after}]
-        )
 
-    summary = (
-        matched.groupBy("old_pid")
-        .applyInPandas(rewrite, "old_pid int, new_pid int, n_before long, n_after long")
-        .collect()
-    )
-    removed = sorted(r["old_pid"] for r in summary if r["n_after"] < r["n_before"])
-    created = sorted(r["new_pid"] for r in summary if r["new_pid"] >= 0)
-    deleted = sum(r["n_before"] - r["n_after"] for r in summary)
-    return {
-        "parts_scanned": len(affected),
-        "parts_rewritten": len(removed),
-        "rows_deleted": int(deleted),
-        "pending": {
-            "removed_parts": removed,
-            "new_parts": created,
-            "rows_deleted": int(deleted),
-        },
-    }
+        def mask(tbl):
+            v = tbl.column(key_col)
+            return pc.and_kleene(pc.is_valid(v), pc.is_in(v, value_set=keys))
+
+        return pd.DataFrame([body.group([old_pid], new_pid[old_pid], mask)])
+
+    summary = [
+        r.asDict() for r in matched.groupBy("old_pid")
+        .applyInPandas(rewrite, from_arrow_schema(_REWRITE_ARROW)).collect()
+    ]
+    return _rewrite_result(affected, summary)
 
 
 @_with_writer_lock("merge")
@@ -4454,7 +4404,8 @@ def _upsert_rows_inner(
     spark, df, out_dir, key_col, merge_id, broadcast_keys, encode_kwargs,
     branch=None,
 ) -> dict:
-    pending_del = {"removed_parts": [], "new_parts": [], "rows_deleted": 0}
+    pending_del = {"removed_parts": [], "new_parts": [], "rows_deleted": 0,
+                   "pm": {}}
     parts_rewritten = 0
     meta = None
     if _exists(_j(out_dir, "_table_meta.json")):
@@ -4538,9 +4489,9 @@ def _upsert_rows_inner(
     _commit_snapshot_entry(
         out_dir, entry, append=True,
         evolved_meta=pend_app["evolved_meta"] if pend_app else None,
-        # append parts' metadata rode the encode summary; rewrite parts
-        # fall back to their checkpoints inside write_manifest
-        pm=pend_app.get("pm") if pend_app else None,
+        # both the rewrite and the append parts' metadata rode their
+        # jobs' summaries: the manifest re-reads no checkpoint
+        pm={**pending_del["pm"], **(pend_app["pm"] if pend_app else {})},
         branch=branch,
     )
     return {
@@ -5647,8 +5598,8 @@ def vacuum_orphans(out_dir: str, *, include_pending: bool = False) -> dict:
         and p not in rsv
         and (protect_base is None or p < protect_base)
     }
-    # vacuumed part ids WILL be reused by the next append (base =
-    # max(completed)+1), breaking the progress cache's ids-never-reused
+    # vacuumed part ids WILL be reused by the next append
+    # (_next_part_base), breaking the progress cache's ids-never-reused
     # premise — drop this table's cache, same as the fresh-run reset
     if orphans:
         _PROGRESS_CACHE.pop(out_dir, None)
